@@ -84,6 +84,7 @@ from hinbox_spark.operators.store_link import (
 from hinbox_spark.pipeline import (
     _table_path, _with_profile_embedding, _with_search_embedding, _write,
 )
+from hinbox_spark.session import local_frame
 from hinbox_spark.tables import SnapshotTable
 
 # store-relative table names
@@ -342,7 +343,8 @@ def run_incremental(
     # fully-seen delta (nightly rerun with no new pages): nothing to link,
     # nothing to commit — the store head stays untouched (no empty batches)
     if articles.isEmpty():
-        metrics = spark.createDataFrame(
+        metrics = local_frame(
+            spark,
             [("delta_articles", 0), ("delta_entities", 0),
              ("store_matched", 0), ("new_entities", 0),
              ("entities_upserted", 0)],
@@ -425,10 +427,10 @@ def run_incremental(
         review2 = review2.localCheckpoint()
     else:
         store_entities = None
-        assignments = spark.createDataFrame(
-            [], "delta_id string, store_id string, reason string, sim double"
+        assignments = local_frame(
+            spark, [], "delta_id string, store_id string, reason string, sim double"
         )
-        review2 = spark.createDataFrame([], review1.schema)
+        review2 = local_frame(spark, [], review1.schema)
 
     # ── FINAL identity map + per-run profile facts ──
     # (built before the upserts: the delta's fact rows give the EXACT
@@ -802,7 +804,8 @@ def run_incremental(
     n_delta = delta_entities.count()
     n_matched = assignments.count()
     n_upserts = upserts.count()
-    metrics = spark.createDataFrame(
+    metrics = local_frame(
+        spark,
         [
             ("delta_articles", n_articles),
             ("delta_entities", n_delta),

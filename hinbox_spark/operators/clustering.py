@@ -23,6 +23,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from hinbox_spark.session import local_frame
+
 
 # below this many edges the linked subgraph is collected and solved with
 # driver-side union-find (one job instead of ~10) — the same adaptive
@@ -91,7 +93,8 @@ def _driver_union_find(nodes: DataFrame, pair_rows) -> DataFrame:
     from pyspark.sql.types import StructField, StructType
 
     id_type = nodes.schema["node_id"].dataType
-    map_df = spark.createDataFrame(
+    map_df = local_frame(
+        spark,
         mapping,
         StructType(
             [

@@ -32,6 +32,7 @@ from hinbox_spark.functions.names import (
     score_canonical_name,
 )
 from hinbox_spark.functions.ner import Gazetteer, extract_mentions_from_text
+from hinbox_spark.session import local_frame
 
 _EXTRACT_SCHEMA = StructType(
     [StructField("title", StringType()), StructField("text", StringType())]
@@ -423,7 +424,7 @@ def extract_mentions_cached(
 
     cache_all = read_extraction_cache(spark, cache_path, version)
     if cache_all is None:  # corpus yielded zero mentions → nothing committed
-        return spark.createDataFrame([], MENTION_QC_SCHEMA)
+        return local_frame(spark, [], MENTION_QC_SCHEMA)
     # re-attach urls: every article (incl. duplicates) gets the mentions of
     # its content hash
     return articles.select("url", "content_hash").join(

@@ -36,6 +36,7 @@ from hinbox_spark.functions.names import (
     ACRONYM_STOPWORDS, compute_acronym, is_acronym_form, is_low_quality_name,
     is_name_contained, normalize_for_match,
 )
+from hinbox_spark.session import local_frame
 
 # blocking tokens appearing in more than this many distinct names are
 # dropped (non-discriminative; prevents quadratic hot buckets at scale)
@@ -198,7 +199,9 @@ def _pairs_equivalence(nodes: DataFrame, cfg: DomainConfig) -> DataFrame:
                 rows.append((etype, normalize_for_match(member), f"{etype}:{gid}"))
     if not rows:
         return _empty_pairs(spark)
-    groups_df = spark.createDataFrame(rows, ["entity_type", "match_key", "group_id"])
+    groups_df = local_frame(
+        spark, rows, "entity_type string, match_key string, group_id string"
+    )
 
     tagged = nodes.join(
         F.broadcast(groups_df), ["entity_type", "match_key"], "inner"
@@ -737,4 +740,4 @@ def arbitrate_review(review: DataFrame) -> DataFrame:
 
 
 def _empty_pairs(spark) -> DataFrame:
-    return spark.createDataFrame([], "src string, dst string, reason string")
+    return local_frame(spark, [], "src string, dst string, reason string")

@@ -59,6 +59,7 @@ from hinbox_spark.operators.linking import (
     containment_verified, cosine_udf, low_quality_pair,
     name_jaccard_3gram, name_lsh_band_entries, tau_expr_for,
 )
+from hinbox_spark.session import local_frame
 
 # deterministic argmax priority: lower rank wins before sim is consulted
 _REASON_RANK = {
@@ -172,13 +173,16 @@ def _family_equivalence(
             for member in group:
                 rows.append((etype, normalize_for_match(member), f"{etype}:{gid}"))
     if not rows:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "delta_id string, store_id string, name_d string, name_s string,"
             " reason string",
         )
     groups_df = F.broadcast(
-        spark.createDataFrame(rows, ["entity_type", "match_key", "group_id"])
+        local_frame(
+            spark, rows, "entity_type string, match_key string, group_id string"
+        )
     )
     d_tag = d_names.join(groups_df, ["entity_type", "match_key"]).select(
         "entity_type", "group_id", "entity_id", "name"

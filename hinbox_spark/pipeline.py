@@ -39,6 +39,7 @@ from hinbox_spark.operators.linking import (
     node_evidence_embeddings, score_pairs,
 )
 from hinbox_spark.operators.profiles import build_profiles, ground_profiles
+from hinbox_spark.session import local_frame
 
 STAGES = (
     "articles", "mentions", "entities", "edges", "profiles",
@@ -80,7 +81,7 @@ def _write(df: DataFrame, base: str, name: str, partition_cols: list[str] | None
     # part file carrying the schema
     if not hfs.has_part_files(df.sparkSession, path):
         # write an empty single-file table from a literal (no plan recompute)
-        df.sparkSession.createDataFrame([], df.schema).repartition(1).write.mode(
+        local_frame(df.sparkSession, [], df.schema).repartition(1).write.mode(
             "overwrite"
         ).parquet(path)
 
@@ -262,8 +263,8 @@ def run_pipeline(
         )
     else:
         mentions = mentions_raw
-        qc_flags = spark.createDataFrame(
-            [], "url string, entity_type string, qc_flag string"
+        qc_flags = local_frame(
+            spark, [], "url string, entity_type string, qc_flag string"
         )
 
     def _metrics_early() -> DataFrame:
@@ -326,7 +327,8 @@ def run_pipeline(
         if run_counters:
             # partition_id −1 = run-level counter, not tied to a partition
             m = m.unionByName(
-                spark.createDataFrame(
+                local_frame(
+                    spark,
                     [(k, -1, v) for k, v in run_counters.items()],
                     "stage string, partition_id int, rows long",
                 )

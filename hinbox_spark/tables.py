@@ -46,6 +46,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from hinbox_spark import fs as hfs
+from hinbox_spark.session import local_frame
 
 _SNAP_FMT = "snapshot-%012d.json"
 # read_resolved(scope=...) collects scope keys for manifest pruning only
@@ -440,7 +441,7 @@ class SnapshotTable:
                 for name, ddl in e["columns"]:
                     seen[name] = ddl  # later batches win a type evolution
             ddl = ", ".join(f"`{n}` {t}" for n, t in seen.items())
-            return self.spark.createDataFrame([], ddl)
+            return local_frame(self.spark, [], ddl)
         paths = [self.data_dir + "/" + e["batch"] for e in entries]
         return (
             self.spark.read.option("mergeSchema", "true")
@@ -546,7 +547,7 @@ class SnapshotTable:
                 # lineage a third time inside the join is pure waste
                 rows = scope.collect()
                 keys = [r[on[0]] for r in rows]
-                scope_lit = self.spark.createDataFrame(rows, scope.schema)
+                scope_lit = local_frame(self.spark, rows, scope.schema)
                 raw = self.read(snapshot_id, prune_keys=(on[0], keys))
                 raw = raw.join(F.broadcast(scope_lit), on, "left_semi")
             else:

@@ -1250,3 +1250,16 @@ def test_kg_completion_eval_filtered_protocol(spark):
 
     _oracle_compare(df.toPandas(), ORACLE_KG_COMPLETION_EVAL, sf,
                     ("customer", "nation", "supplier", "orders"))
+
+
+def test_t_rowcount_counts_hive_partitioned_directory(spark, tmp_path):
+    """A partitioned table has no top-level part file: the footer sum
+    would read 0 (a bound that passes every broadcast cap) — it must fall
+    back to the exact count."""
+    from hinbox_spark.plans.queries import _t_rowcount
+
+    df = spark.range(1234).selectExpr("id", "id % 3 AS k")
+    df.write.partitionBy("k").parquet(str(tmp_path / "parted.parquet"))
+    df.coalesce(2).write.parquet(str(tmp_path / "flat.parquet"))
+    assert _t_rowcount(spark, str(tmp_path), "parted") == 1234
+    assert _t_rowcount(spark, str(tmp_path), "flat") == 1234
