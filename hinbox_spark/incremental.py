@@ -5,11 +5,11 @@ store-linking cost scale with |delta|, never with the accumulated corpus.
 This is the reference's actual operating mode (hinbox ingests article
 batches and merges each new entity into the existing store,
 /root/reference/src/process_and_extract.py:545-760) re-expressed
-set-oriented: the delta is first resolved AMONG ITSELF with the exact batch
-operators (blocking → match check → connected components → canonicalize),
-then the resulting delta entities are linked against the store with the
-bipartite families in `operators/store_link.py`, and the store tables are
-updated with atomic snapshot commits:
+set-oriented: the delta is first resolved AMONG ITSELF by `pipeline.resolve`,
+the same chain the batch build runs (blocking → match check → connected
+components → canonicalize), then the resulting delta entities are linked
+against the store with the bipartite families in `operators/store_link.py`,
+and the store tables are updated with atomic snapshot commits:
 
   entities         merge-on-read upsert by entity_id — matched entities
                    absorb the delta's aliases/articles/counters, new
@@ -59,20 +59,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from hinbox_spark import fs as hfs
+from hinbox_spark import pipeline as pl
 from hinbox_spark.config import DomainConfig, get_default_config
-from hinbox_spark.functions.ner import default_gazetteer  # noqa: F401 (back-compat)
 from hinbox_spark.operators.canonicalize import (
-    ENTITY_ARTICLES_CAP, build_clusters, build_edge_triples, build_entities,
-    canonical_names,
-)
-from hinbox_spark.operators.clustering import connected_components
-from hinbox_spark.operators.extraction import (
-    extract_articles, extract_mentions_cached, extract_mentions_with_flags,
-    relevance_predicate, scrub_articles,
-)
-from hinbox_spark.operators.linking import (
-    arbitrate_review, candidate_pairs, mention_nodes, name_lsh_band_entries,
-    node_evidence_embeddings, score_pairs,
+    ENTITY_ARTICLES_CAP, build_edge_triples,
 )
 from hinbox_spark.operators.profiles import (
     PROFILE_ARTICLES_CAP, assemble_profiles, ground_profiles,
@@ -315,8 +305,6 @@ def run_incremental(
         raise ValueError("run_incremental requires cfg.snapshot_store_path")
     store = cfg.snapshot_store_path
     run_id = run_id or uuid.uuid4().hex
-    from hinbox_spark.config_loader import gazetteer_for
-    gaz = gazetteer_for(cfg)
     hfs.mkdirs(spark, output_dir)
 
     # a previous run that crashed mid-apply left partial store commits —
@@ -324,512 +312,458 @@ def run_incremental(
     # this run reads anything (single-writer model)
     _recover_stale_runs(spark, store)
 
-    # ── cross-run F2: content-hash skip against the processed-pages log ──
-    articles = scrub_articles(extract_articles(pages), cfg).withColumn(
-        "is_relevant", relevance_predicate(cfg.relevance_keywords)
-    )
-    st_pages = _st(spark, store, PAGES_LOG)
-    if _exists(st_pages):
-        seen = (
-            st_pages.read()
-            .select("url", F.col("content_hash").alias("content_hash"))
-            .dropDuplicates(["url", "content_hash"])
-        )
-        articles = articles.join(seen, ["url", "content_hash"], "left_anti")
-    # parse once, eagerly — every downstream stage reuses the blocks
-    articles = articles.localCheckpoint()
-    _write(articles, output_dir, "articles")
-
-    # fully-seen delta (nightly rerun with no new pages): nothing to link,
-    # nothing to commit — the store head stays untouched (no empty batches)
-    if articles.isEmpty():
-        metrics = local_frame(
-            spark,
-            [("delta_articles", 0), ("delta_entities", 0),
-             ("store_matched", 0), ("new_entities", 0),
-             ("entities_upserted", 0)],
-            "stage string, rows long",
-        ).withColumn("run_id", F.lit(run_id))
-        _write(metrics, output_dir, "metrics")
-        st_e = _st(spark, store, ENTITIES)
-        return {
-            "articles": articles,
-            "entities_store": (
-                st_e.read_resolved(["entity_id"]) if _exists(st_e) else None
-            ),
-            "metrics": spark.read.parquet(_table_path(output_dir, "metrics")),
-        }
-
-    # ── delta extraction (same operators as the batch stage 2) ──
-    relevant = articles.filter(F.col("is_relevant"))
-    cache_stats: dict = {}
-    if cfg.extraction_cache_path:
-        extracted = extract_mentions_cached(
-            relevant, gaz, cfg.extraction_cache_path, stats_out=cache_stats
-        )
-    else:
-        extracted = extract_mentions_with_flags(relevant, gaz)
-    _write(extracted, output_dir, "mentions", ["entity_type"])
-    mentions_raw = spark.read.parquet(_table_path(output_dir, "mentions"))
-    if "qc_flag" in mentions_raw.columns:
-        mentions = mentions_raw.filter(F.col("qc_flag").isNull()).drop("qc_flag")
-    else:
-        mentions = mentions_raw
-
-    # ── delta self-resolution (exact batch operators, no store involved) ──
-    nodes = mention_nodes(mentions).cache()
-    band_entries = name_lsh_band_entries(nodes).localCheckpoint(eager=False)
-    pairs = candidate_pairs(nodes, cfg, band_entries=band_entries)
-    node_vecs = node_evidence_embeddings(nodes, mentions, articles, cfg)
-    accepted, review1 = score_pairs(pairs, nodes, node_vecs, cfg)
-    review1 = arbitrate_review(review1).localCheckpoint()
-    accepted = accepted.unionByName(
-        review1.filter(F.col("decision") == "merge").select(
-            "src", "dst", "entity_type",
-            F.lit("dispute_merge").alias("reason"), "sim",
-        )
-    )
-    labels = connected_components(
-        nodes.select("node_id"), accepted.select("src", "dst")
-    )
-    clusters = build_clusters(mentions, nodes, labels, articles).cache()
-    canon = canonical_names(clusters)
-    delta_entities = _with_search_embedding(
-        build_entities(clusters, canon), cfg
-    ).localCheckpoint()
-
-    # ── bipartite store linking ──
-    st_entities = _st(spark, store, ENTITIES)
-    if _exists(st_entities):
-        store_entities = st_entities.read_resolved(["entity_id"]).localCheckpoint(
-            eager=False
-        )
-        # persisted blocking index: raw reads (duplicate keys across
-        # batches are deduped here; compaction keeps the chains short) —
-        # the store side of every blocking family is a columnar scan of
-        # precomputed keys, no UDF pass over store entities
-        st_idx = _st(spark, store, NAME_INDEX)
-        st_bands = _st(spark, store, NAME_BANDS)
-        if _exists(st_idx) and _exists(st_bands):
-            store_names = st_idx.read().drop("_seq").dropDuplicates(
-                ["entity_id", "entity_type", "match_key"]
+    with pl.overlap(spark) as ov:
+        # ── cross-run F2: content-hash skip against the processed-pages log ──
+        articles = pl.relevant_articles(pages, cfg)
+        st_pages = _st(spark, store, PAGES_LOG)
+        if _exists(st_pages):
+            seen = (
+                st_pages.read()
+                .select("url", F.col("content_hash").alias("content_hash"))
+                .dropDuplicates(["url", "content_hash"])
             )
-            store_bands = st_bands.read().drop("_seq").dropDuplicates(
-                ["entity_type", "node_id", "band"]
-            )
-        else:
-            store_names = store_bands = None
-        assignments, review2 = link_entities_to_store(
-            delta_entities, store_entities, cfg,
-            store_names=store_names, store_bands=store_bands,
-        )
-        assignments = assignments.localCheckpoint()
-        review2 = review2.localCheckpoint()
-    else:
-        store_entities = None
-        assignments = local_frame(
-            spark, [], "delta_id string, store_id string, reason string, sim double"
-        )
-        review2 = local_frame(spark, [], review1.schema)
+            articles = articles.join(seen, ["url", "content_hash"], "left_anti")
+        # parse once, eagerly — every downstream stage reuses the blocks
+        articles = articles.localCheckpoint()
+        ov.keep(articles)  # returned
+        _write(articles, output_dir, "articles")
 
-    # ── FINAL identity map + per-run profile facts ──
-    # (built before the upserts: the delta's fact rows give the EXACT
-    # distinct-url contribution per final entity, so merged n_articles
-    # never double-counts a url shared by two delta clusters that landed
-    # in the same store entity)
-    ent_map = delta_entities.select(
-        "cluster_id", "entity_id", "canonical_name", "canonical_type"
-    )
-    if store_entities is not None:
-        sm = store_entities.select(
-            F.col("entity_id").alias("store_id"),
-            F.col("canonical_name").alias("_s_canon"),
-            F.col("canonical_type").alias("_s_ctype"),
-        )
-        ent_map = (
-            ent_map.join(
-                assignments.select(
-                    F.col("delta_id").alias("entity_id"), "store_id"
+        # fully-seen delta (nightly rerun with no new pages): nothing to link,
+        # nothing to commit — the store head stays untouched (no empty batches)
+        if articles.isEmpty():
+            metrics = local_frame(
+                spark,
+                [("delta_articles", 0), ("delta_entities", 0),
+                 ("store_matched", 0), ("new_entities", 0),
+                 ("entities_upserted", 0)],
+                "stage string, rows long",
+            ).withColumn("run_id", F.lit(run_id))
+            _write(metrics, output_dir, "metrics")
+            st_e = _st(spark, store, ENTITIES)
+            return {
+                "articles": articles,
+                "entities_store": (
+                    st_e.read_resolved(["entity_id"]) if _exists(st_e) else None
                 ),
-                "entity_id",
-                "left",
-            )
-            .join(sm, "store_id", "left")
-            .select(
-                "cluster_id",
-                F.coalesce("store_id", "entity_id").alias("entity_id"),
-                F.coalesce("_s_canon", "canonical_name").alias("canonical_name"),
-                F.coalesce("_s_ctype", "canonical_type").alias("canonical_type"),
-            )
-        )
-    # eager: three concurrent consumers below (facts append, cited build,
-    # profile rebuild) must share materialized blocks, not race a lazy
-    # checkpoint. Re-reduced per (entity_id, url) AFTER the remap: two
-    # delta clusters assigned to the same store entity would otherwise
-    # leave duplicate fact keys — duplicate rows consume profile-cap slots
-    # (dropping a legitimate url from the rebuilt profile) and make the
-    # stored row per key a nondeterministic tie. The re-reduction is the
-    # same min/max fold the batch path applies over the merged cluster.
-    facts = (
-        profile_fact_rows(clusters)
-        .join(ent_map.select("cluster_id", "entity_id"), "cluster_id")
-        .groupBy("entity_id", "url")
-        .agg(
-            F.min("warc_ts").alias("warc_ts"),
-            F.max("description").alias("description"),
-            F.max("start_date").alias("start_date"),
-        )
-        .localCheckpoint()
-    )
+                "metrics": spark.read.parquet(_table_path(output_dir, "metrics")),
+            }
 
-    # ── build the entity upserts ──
-    if store_entities is None:
-        upserts = delta_entities
-    else:
-        a_keyed = assignments.select(
-            F.col("delta_id").alias("entity_id"), "store_id"
-        )
-        matched = delta_entities.join(a_keyed, "entity_id")
-        unmatched = delta_entities.join(a_keyed.select("entity_id"),
-                                        "entity_id", "left_anti")
+        # ── delta extraction and self-resolution: the batch build's steps,
+        # no store involved ──
+        mentions, _ = pl.extract_mentions(spark, articles, output_dir, cfg)
+        r = pl.resolve(mentions, articles, cfg)
+        ov.release(r.nodes, r.clusters)
+        clusters, review1 = r.clusters, r.review
+        delta_entities = r.entities.localCheckpoint()
 
-        # distinct-first contributions per store entity (mega-merge safe:
-        # explode → distinct has map-side combine; no collect_list ever
-        # sees duplicate-heavy input). The article contribution is the
-        # EXACT per-final-entity distinct-url count from this run's fact
-        # rows — O(delta), never a store scan; additive with the store
-        # count because the processed-pages log keeps run url sets
-        # disjoint (a changed-content url reprocess is the documented
-        # +1 approximation).
-        scalars = matched.groupBy("store_id").agg(
-            F.sum("n_mentions").alias("d_mentions"),
-            F.min("extraction_timestamp").alias("d_ts"),
-        ).join(
-            facts.groupBy(F.col("entity_id").alias("store_id")).agg(
-                F.countDistinct("url").alias("d_articles")
-            ),
-            "store_id",
+        # ── bipartite store linking ──
+        st_entities = _st(spark, store, ENTITIES)
+        if _exists(st_entities):
+            store_entities = st_entities.read_resolved(["entity_id"]).localCheckpoint(
+                eager=False
+            )
+            # persisted blocking index: raw reads (duplicate keys across
+            # batches are deduped here; compaction keeps the chains short) —
+            # the store side of every blocking family is a columnar scan of
+            # precomputed keys, no UDF pass over store entities
+            st_idx = _st(spark, store, NAME_INDEX)
+            st_bands = _st(spark, store, NAME_BANDS)
+            if _exists(st_idx) and _exists(st_bands):
+                store_names = st_idx.read().drop("_seq").dropDuplicates(
+                    ["entity_id", "entity_type", "match_key"]
+                )
+                store_bands = st_bands.read().drop("_seq").dropDuplicates(
+                    ["entity_type", "node_id", "band"]
+                )
+            else:
+                store_names = store_bands = None
+            assignments, review2 = link_entities_to_store(
+                delta_entities, store_entities, cfg,
+                store_names=store_names, store_bands=store_bands,
+            )
+            assignments = assignments.localCheckpoint()
+            ov.keep(assignments)  # returned
+            review2 = review2.localCheckpoint()
+        else:
+            store_entities = None
+            assignments = local_frame(
+                spark, [], "delta_id string, store_id string, reason string, sim double"
+            )
+            review2 = local_frame(spark, [], review1.schema)
+
+        # ── FINAL identity map + per-run profile facts ──
+        # (built before the upserts: the delta's fact rows give the EXACT
+        # distinct-url contribution per final entity, so merged n_articles
+        # never double-counts a url shared by two delta clusters that landed
+        # in the same store entity)
+        ent_map = delta_entities.select(
+            "cluster_id", "entity_id", "canonical_name", "canonical_type"
         )
-        d_alias = (
-            matched.select("store_id", F.explode_outer("aliases").alias("v"))
-            .filter(F.col("v").isNotNull()).distinct()
-            .groupBy("store_id").agg(F.collect_list("v").alias("d_aliases"))
-        )
-        d_names = (
-            matched.select("store_id", F.explode_outer("all_names").alias("v"))
-            .filter(F.col("v").isNotNull()).distinct()
-            .groupBy("store_id").agg(F.collect_list("v").alias("d_all_names"))
-        )
-        d_entries = (
-            matched.select("store_id", F.explode_outer("alt_entries").alias("e"))
-            .filter(F.col("e").isNotNull())
-            .unionByName(
-                matched.select(
-                    "store_id",
-                    F.struct(
-                        F.col("canonical_name").alias("name"),
-                        F.col("canonical_type").alias("type"),
-                        F.col("canonical_start_date").alias("start_date"),
-                    ).alias("e"),
+        if store_entities is not None:
+            sm = store_entities.select(
+                F.col("entity_id").alias("store_id"),
+                F.col("canonical_name").alias("_s_canon"),
+                F.col("canonical_type").alias("_s_ctype"),
+            )
+            ent_map = (
+                ent_map.join(
+                    assignments.select(
+                        F.col("delta_id").alias("entity_id"), "store_id"
+                    ),
+                    "entity_id",
+                    "left",
+                )
+                .join(sm, "store_id", "left")
+                .select(
+                    "cluster_id",
+                    F.coalesce("store_id", "entity_id").alias("entity_id"),
+                    F.coalesce("_s_canon", "canonical_name").alias("canonical_name"),
+                    F.coalesce("_s_ctype", "canonical_type").alias("canonical_type"),
                 )
             )
-            .distinct()
-            .groupBy("store_id").agg(F.collect_list("e").alias("d_entries"))
-        )
-        contrib = (
-            scalars.join(d_alias, "store_id", "left")
-            .join(d_names, "store_id", "left")
-            .join(d_entries, "store_id", "left")
+        # eager: three concurrent consumers below (facts append, cited build,
+        # profile rebuild) must share materialized blocks, not race a lazy
+        # checkpoint. Re-reduced per (entity_id, url) AFTER the remap: two
+        # delta clusters assigned to the same store entity would otherwise
+        # leave duplicate fact keys — duplicate rows consume profile-cap slots
+        # (dropping a legitimate url from the rebuilt profile) and make the
+        # stored row per key a nondeterministic tie. The re-reduction is the
+        # same min/max fold the batch path applies over the merged cluster.
+        facts = (
+            profile_fact_rows(clusters)
+            .join(ent_map.select("cluster_id", "entity_id"), "cluster_id")
+            .groupBy("entity_id", "url")
+            .agg(
+                F.min("warc_ts").alias("warc_ts"),
+                F.max("description").alias("description"),
+                F.max("start_date").alias("start_date"),
+            )
+            .localCheckpoint()
         )
 
-        s = store_entities.join(
-            contrib.withColumnRenamed("store_id", "entity_id"), "entity_id"
-        )
-        empty_arr = F.array().cast("array<string>")
-        d_aliases = F.coalesce("d_aliases", empty_arr)
-        d_all_names = F.coalesce("d_all_names", empty_arr)
-        d_ent = F.coalesce(
-            "d_entries",
-            F.array().cast(
-                "array<struct<name:string,type:string,start_date:string>>"
-            ),
-        )
-        # aliases: store ∪ delta ∪ (delta names − store canonical) — the
-        # delta's canonical name becomes an alias of the sticky store name
-        merged = (
-            s.withColumn(
-                "aliases",
-                F.array_sort(F.array_distinct(F.concat(
-                    "aliases", d_aliases,
-                    F.array_except(d_all_names, F.array("canonical_name")),
-                ))),
+        # ── build the entity upserts ──
+        if store_entities is None:
+            upserts = delta_entities
+        else:
+            a_keyed = assignments.select(
+                F.col("delta_id").alias("entity_id"), "store_id"
             )
-            .withColumn(
-                "all_names",
-                F.array_sort(F.array_distinct(F.concat("all_names", d_all_names))),
+            matched = delta_entities.join(a_keyed, "entity_id")
+            unmatched = delta_entities.join(a_keyed.select("entity_id"),
+                                            "entity_id", "left_anti")
+
+            # distinct-first contributions per store entity (mega-merge safe:
+            # explode → distinct has map-side combine; no collect_list ever
+            # sees duplicate-heavy input). The article contribution is the
+            # EXACT per-final-entity distinct-url count from this run's fact
+            # rows — O(delta), never a store scan; additive with the store
+            # count because the processed-pages log keeps run url sets
+            # disjoint (a changed-content url reprocess is the documented
+            # +1 approximation).
+            scalars = matched.groupBy("store_id").agg(
+                F.sum("n_mentions").alias("d_mentions"),
+                F.min("extraction_timestamp").alias("d_ts"),
+            ).join(
+                facts.groupBy(F.col("entity_id").alias("store_id")).agg(
+                    F.countDistinct("url").alias("d_articles")
+                ),
+                "store_id",
             )
-            .withColumn(
-                "alt_entries",
-                F.array_sort(F.array_distinct(F.concat(
+            d_alias = (
+                matched.select("store_id", F.explode_outer("aliases").alias("v"))
+                .filter(F.col("v").isNotNull()).distinct()
+                .groupBy("store_id").agg(F.collect_list("v").alias("d_aliases"))
+            )
+            d_names = (
+                matched.select("store_id", F.explode_outer("all_names").alias("v"))
+                .filter(F.col("v").isNotNull()).distinct()
+                .groupBy("store_id").agg(F.collect_list("v").alias("d_all_names"))
+            )
+            d_entries = (
+                matched.select("store_id", F.explode_outer("alt_entries").alias("e"))
+                .filter(F.col("e").isNotNull())
+                .unionByName(
+                    matched.select(
+                        "store_id",
+                        F.struct(
+                            F.col("canonical_name").alias("name"),
+                            F.col("canonical_type").alias("type"),
+                            F.col("canonical_start_date").alias("start_date"),
+                        ).alias("e"),
+                    )
+                )
+                .distinct()
+                .groupBy("store_id").agg(F.collect_list("e").alias("d_entries"))
+            )
+            contrib = (
+                scalars.join(d_alias, "store_id", "left")
+                .join(d_names, "store_id", "left")
+                .join(d_entries, "store_id", "left")
+            )
+
+            s = store_entities.join(
+                contrib.withColumnRenamed("store_id", "entity_id"), "entity_id"
+            )
+            empty_arr = F.array().cast("array<string>")
+            d_aliases = F.coalesce("d_aliases", empty_arr)
+            d_all_names = F.coalesce("d_all_names", empty_arr)
+            d_ent = F.coalesce(
+                "d_entries",
+                F.array().cast(
+                    "array<struct<name:string,type:string,start_date:string>>"
+                ),
+            )
+            # aliases: store ∪ delta ∪ (delta names − store canonical) — the
+            # delta's canonical name becomes an alias of the sticky store name
+            merged = (
+                s.withColumn(
+                    "aliases",
+                    F.array_sort(F.array_distinct(F.concat(
+                        "aliases", d_aliases,
+                        F.array_except(d_all_names, F.array("canonical_name")),
+                    ))),
+                )
+                .withColumn(
+                    "all_names",
+                    F.array_sort(F.array_distinct(F.concat("all_names", d_all_names))),
+                )
+                .withColumn(
                     "alt_entries",
-                    F.filter(
-                        d_ent,
-                        lambda e: ~(
-                            (e["name"] == F.col("canonical_name"))
-                            & (e["type"] == F.col("canonical_type"))
-                            & (e["start_date"] == F.col("canonical_start_date"))
+                    F.array_sort(F.array_distinct(F.concat(
+                        "alt_entries",
+                        F.filter(
+                            d_ent,
+                            lambda e: ~(
+                                (e["name"] == F.col("canonical_name"))
+                                & (e["type"] == F.col("canonical_type"))
+                                & (e["start_date"] == F.col("canonical_start_date"))
+                            ),
+                        ),
+                    ))),
+                )
+                .withColumn("n_mentions", F.col("n_mentions") + F.col("d_mentions"))
+                .withColumn("n_articles", F.col("n_articles") + F.col("d_articles"))
+                .withColumn(
+                    "extraction_timestamp",
+                    F.least("extraction_timestamp", "d_ts"),
+                )
+            )
+            # derived alt projections + reference-masked alternative_names —
+            # same construction as build_entities
+            merged = (
+                merged.withColumn(
+                    "alt_names",
+                    F.array_sort(F.array_distinct(
+                        F.transform("alt_entries", lambda e: e["name"])
+                    )),
+                )
+                .withColumn(
+                    "alt_types",
+                    F.array_sort(F.array_distinct(
+                        F.transform("alt_entries", lambda e: e["type"])
+                    )),
+                )
+                .withColumn(
+                    "alt_start_dates",
+                    F.array_sort(F.array_distinct(
+                        F.transform("alt_entries", lambda e: e["start_date"])
+                    )),
+                )
+                .withColumn(
+                    "alternative_names",
+                    F.transform(
+                        "alt_entries",
+                        lambda e: F.struct(
+                            e["name"].alias("name"),
+                            F.when(F.col("entity_type") == "people", F.lit(""))
+                            .otherwise(e["type"]).alias("type"),
+                            F.when(
+                                F.col("entity_type") == "events", e["start_date"]
+                            ).otherwise(F.lit("")).alias("start_date"),
                         ),
                     ),
-                ))),
-            )
-            .withColumn("n_mentions", F.col("n_mentions") + F.col("d_mentions"))
-            .withColumn("n_articles", F.col("n_articles") + F.col("d_articles"))
-            .withColumn(
-                "extraction_timestamp",
-                F.least("extraction_timestamp", "d_ts"),
-            )
-        )
-        # derived alt projections + reference-masked alternative_names —
-        # same construction as build_entities
-        merged = (
-            merged.withColumn(
-                "alt_names",
-                F.array_sort(F.array_distinct(
-                    F.transform("alt_entries", lambda e: e["name"])
-                )),
-            )
-            .withColumn(
-                "alt_types",
-                F.array_sort(F.array_distinct(
-                    F.transform("alt_entries", lambda e: e["type"])
-                )),
-            )
-            .withColumn(
-                "alt_start_dates",
-                F.array_sort(F.array_distinct(
-                    F.transform("alt_entries", lambda e: e["start_date"])
-                )),
-            )
-            .withColumn(
-                "alternative_names",
-                F.transform(
-                    "alt_entries",
-                    lambda e: F.struct(
-                        e["name"].alias("name"),
-                        F.when(F.col("entity_type") == "people", F.lit(""))
-                        .otherwise(e["type"]).alias("type"),
-                        F.when(
-                            F.col("entity_type") == "events", e["start_date"]
-                        ).otherwise(F.lit("")).alias("start_date"),
-                    ),
-                ),
-            )
-        )
-        # articles sample: union of the per-run earliest-first samples,
-        # re-capped with the same tournament as build_entities
-        from hinbox_spark.functions.skew import bounded_topk
-
-        art_rows = (
-            merged.select("entity_id", F.explode_outer("articles").alias("a"))
-            .unionByName(
-                matched.select(
-                    F.col("store_id").alias("entity_id"),
-                    F.explode_outer("articles").alias("a"),
                 )
             )
-            .filter(F.col("a").isNotNull())
-            .select("entity_id", "a.url", "a.warc_ts", "a.title")
-            .dropDuplicates(["entity_id", "url"])
-        )
-        art_agg = (
-            bounded_topk(
-                art_rows,
-                keys=["entity_id"],
-                order_by=[F.col("warc_ts"), F.col("url")],
-                k=ENTITY_ARTICLES_CAP,
-                salt_expr=F.xxhash64("url"),
+            # articles sample: union of the per-run earliest-first samples,
+            # re-capped with the same tournament as build_entities
+            from hinbox_spark.functions.skew import bounded_topk
+
+            art_rows = (
+                merged.select("entity_id", F.explode_outer("articles").alias("a"))
+                .unionByName(
+                    matched.select(
+                        F.col("store_id").alias("entity_id"),
+                        F.explode_outer("articles").alias("a"),
+                    )
+                )
+                .filter(F.col("a").isNotNull())
+                .select("entity_id", "a.url", "a.warc_ts", "a.title")
+                .dropDuplicates(["entity_id", "url"])
             )
-            .groupBy("entity_id")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("url", "warc_ts", "title"))
-                ).alias("articles_new")
+            art_agg = (
+                bounded_topk(
+                    art_rows,
+                    keys=["entity_id"],
+                    order_by=[F.col("warc_ts"), F.col("url")],
+                    k=ENTITY_ARTICLES_CAP,
+                    salt_expr=F.xxhash64("url"),
+                )
+                .groupBy("entity_id")
+                .agg(
+                    F.array_sort(
+                        F.collect_list(F.struct("url", "warc_ts", "title"))
+                    ).alias("articles_new")
+                )
             )
-        )
-        merged = (
-            merged.join(art_agg, "entity_id", "left")
-            .withColumn("articles", F.coalesce("articles_new", "articles"))
-            .drop("articles_new", "d_mentions", "d_articles", "d_ts",
-                  "d_aliases", "d_all_names", "d_entries")
-        )
-        # refresh the search embedding from the merged name+alias set
-        merged = _with_search_embedding(
-            merged.drop(
-                "search_embedding", "search_embedding_model",
-                "search_embedding_dim", "search_embedding_fingerprint",
-            ),
-            cfg,
-        )
-        if "partition_id" not in unmatched.columns:
-            unmatched = unmatched.withColumn(
-                "partition_id", F.spark_partition_id()
+            merged = (
+                merged.join(art_agg, "entity_id", "left")
+                .withColumn("articles", F.coalesce("articles_new", "articles"))
+                .drop("articles_new", "d_mentions", "d_articles", "d_ts",
+                      "d_aliases", "d_all_names", "d_entries")
             )
-        upserts = merged.select(*store_entities.columns).unionByName(
-            unmatched.select(*store_entities.columns)
+            # refresh the search embedding from the merged name+alias set
+            merged = _with_search_embedding(
+                merged.drop(
+                    "search_embedding", "search_embedding_model",
+                    "search_embedding_dim", "search_embedding_fingerprint",
+                ),
+                cfg,
+            )
+            if "partition_id" not in unmatched.columns:
+                unmatched = unmatched.withColumn(
+                    "partition_id", F.spark_partition_id()
+                )
+            upserts = merged.select(*store_entities.columns).unionByName(
+                unmatched.select(*store_entities.columns)
+            )
+
+        if "partition_id" not in upserts.columns:
+            upserts = upserts.withColumn("partition_id", F.spark_partition_id())
+        upserts = upserts.localCheckpoint()
+
+        # ── apply: every store commit and per-run write below is independent
+        # of the others (disjoint tables; the profile rebuild consumes the
+        # PRE-append facts snapshot plus the in-memory delta facts), so they
+        # run as CONCURRENT Spark jobs from driver threads — the delta run's
+        # fixed tail is ~a dozen small commits, and overlapping them is what
+        # keeps a nightly delta cheaper than its corpus share.
+
+        # ── run transaction: record every mutated table's pre-run head BEFORE
+        # the first commit; a crash anywhere below leaves this pending record,
+        # and the next run's _recover_stale_runs rolls all tables back to
+        # these heads — so the retry applies the delta exactly once ──
+        hfs.mkdirs(spark, _runs_dir(store))
+        heads = {
+            t: _st(spark, store, t).latest_snapshot_id() for t in _RUN_TABLES
+        }
+        hfs.write_text(
+            spark,
+            _runs_dir(store) + f"/{run_id}.pending.json",
+            json.dumps(heads),
         )
 
-    if "partition_id" not in upserts.columns:
-        upserts = upserts.withColumn("partition_id", F.spark_partition_id())
-    upserts = upserts.localCheckpoint()
+        edges = build_edge_triples(clusters, ent_map)
+        review = review1.unionByName(review2, allowMissingColumns=True)
+        cited = articles.join(facts.select("url").distinct(), "url").select(
+            "url", "text"
+        ).localCheckpoint()  # eager: CITED append ∥ grounding both consume it
 
-    # ── apply: every store commit and per-run write below is independent
-    # of the others (disjoint tables; the profile rebuild consumes the
-    # PRE-append facts snapshot plus the in-memory delta facts), so they
-    # run as CONCURRENT Spark jobs from driver threads — the delta run's
-    # fixed tail is ~a dozen small commits, and overlapping them is what
-    # keeps a nightly delta cheaper than its corpus share (same discipline
-    # as the batch pipeline's overlapped linking writes, exception-safe).
-    from concurrent.futures import ThreadPoolExecutor
+        def _edges_task():
+            _write(edges, output_dir, "edges", ["pred"])
+            back = spark.read.parquet(_table_path(output_dir, "edges"))
+            _st(spark, store, EDGES).append(
+                back.withColumn("run_id", F.lit(run_id))
+            )
 
-    # ── run transaction: record every mutated table's pre-run head BEFORE
-    # the first commit; a crash anywhere below leaves this pending record,
-    # and the next run's _recover_stale_runs rolls all tables back to
-    # these heads — so the retry applies the delta exactly once ──
-    hfs.mkdirs(spark, _runs_dir(store))
-    heads = {
-        t: _st(spark, store, t).latest_snapshot_id() for t in _RUN_TABLES
-    }
-    hfs.write_text(
-        spark,
-        _runs_dir(store) + f"/{run_id}.pending.json",
-        json.dumps(heads),
-    )
+        def _review_task():
+            # append the pre-write frame (no partition_id) — same shape as the
+            # batch bootstrap's queue rows, so cross-run queue reads union
+            _st(spark, store, QUEUE).append(
+                review.withColumn("run_id", F.lit(run_id))
+            )
+            _write(review, output_dir, "review")
 
-    edges = build_edge_triples(clusters, ent_map)
-    review = review1.unionByName(review2, allowMissingColumns=True)
-    cited = articles.join(facts.select("url").distinct(), "url").select(
-        "url", "text"
-    ).localCheckpoint()  # eager: CITED append ∥ grounding both consume it
+        def _profiles_task():
+            profiles = _rebuild_profiles(spark, store, cfg, upserts, facts, cited)
+            _write(profiles, output_dir, "profiles")
+            back = spark.read.parquet(_table_path(output_dir, "profiles"))
+            _st(spark, store, PROFILES).merge(back)
 
-    def _edges_task():
-        _write(edges, output_dir, "edges", ["pred"])
-        back = spark.read.parquet(_table_path(output_dir, "edges"))
-        _st(spark, store, EDGES).append(
-            back.withColumn("run_id", F.lit(run_id))
-        )
-
-    def _review_task():
-        # append the pre-write frame (no partition_id) — same shape as the
-        # batch bootstrap's queue rows, so cross-run queue reads union
-        _st(spark, store, QUEUE).append(
-            review.withColumn("run_id", F.lit(run_id))
-        )
-        _write(review, output_dir, "review")
-
-    def _profiles_task():
-        profiles = _rebuild_profiles(spark, store, cfg, upserts, facts, cited)
-        _write(profiles, output_dir, "profiles")
-        back = spark.read.parquet(_table_path(output_dir, "profiles"))
-        _st(spark, store, PROFILES).merge(back)
-
-    pool = ThreadPoolExecutor(max_workers=4)
-    background = []
-    try:
-        background.append(pool.submit(st_entities.merge, upserts))
-        background.append(
-            pool.submit(_write, upserts, output_dir, "entities_delta",
-                        ["entity_type"])
-        )
-        background.append(pool.submit(_edges_task))
-        background.append(pool.submit(_review_task))
-        background.append(pool.submit(_st(spark, store, FACTS).append, facts))
-        background.append(pool.submit(_st(spark, store, CITED).append, cited))
+        ov.submit(st_entities.merge, upserts)
+        ov.submit(_write, upserts, output_dir, "entities_delta", ["entity_type"])
+        ov.submit(_edges_task)
+        ov.submit(_review_task)
+        ov.submit(_st(spark, store, FACTS).append, facts)
+        ov.submit(_st(spark, store, CITED).append, cited)
         # blocking-index maintenance: ONLY the upserted entities' name
         # rows are (re)computed — delta-sized work; duplicates vs prior
         # index rows are deduped at read and folded by compaction
         idx_new = name_index_rows(upserts).localCheckpoint()
-        background.append(pool.submit(_st(spark, store, NAME_INDEX).append, idx_new))
-        background.append(
-            pool.submit(_st(spark, store, NAME_BANDS).append, name_band_rows(idx_new))
-        )
+        ov.submit(_st(spark, store, NAME_INDEX).append, idx_new)
+        ov.submit(_st(spark, store, NAME_BANDS).append, name_band_rows(idx_new))
         # profiles rebuild is the long pole — run it on the main thread
         _profiles_task()
-    finally:
-        import sys as _sys
+        ov.join()
 
-        bg_error = None
-        for fut in background:
-            try:
-                fut.result()
-            except Exception as exc:
-                if bg_error is None:
-                    bg_error = exc
-        pool.shutdown(wait=True)
-        if bg_error is not None and _sys.exc_info()[0] is None:
-            raise bg_error
-
-    # ── processed-pages log (cross-run F2) — committed LAST, strictly
-    # after every entity/fact/profile commit has succeeded: a crash
-    # anywhere above leaves the pages un-logged, so the documented
-    # recovery (re-run the same delta) reprocesses them; logging them
-    # concurrently would let a partial failure mark pages processed while
-    # their contributions were never applied, and the rerun would then
-    # skip them forever ──
-    st_pages.append(
-        articles.select("url", "content_hash").withColumn(
-            "run_id", F.lit(run_id)
+        # ── processed-pages log (cross-run F2) — committed LAST, strictly
+        # after every entity/fact/profile commit has succeeded: a crash
+        # anywhere above leaves the pages un-logged, so the documented
+        # recovery (re-run the same delta) reprocesses them; logging them
+        # concurrently would let a partial failure mark pages processed while
+        # their contributions were never applied, and the rerun would then
+        # skip them forever ──
+        st_pages.append(
+            articles.select("url", "content_hash").withColumn(
+                "run_id", F.lit(run_id)
+            )
         )
-    )
 
-    # finalize the run transaction: publish the journal (create-exclusive)
-    # and drop the pending record — from here the run can never be rolled
-    # back by recovery
-    tmp = _runs_dir(store) + f"/_tmp-{run_id}.json"
-    hfs.write_text(spark, tmp, json.dumps({"run_id": run_id, "tables": heads}))
-    if not hfs.publish_without_overwrite(
-        spark, tmp, _runs_dir(store) + f"/{run_id}.json"
-    ):
-        # same run_id already finalized (a re-delivered streaming epoch
-        # whose content-hash skip made this run an empty no-op): drop the
-        # loser's temp, keep the original journal
-        hfs.delete(spark, tmp)
-    hfs.delete(spark, _runs_dir(store) + f"/{run_id}.pending.json")
+        # finalize the run transaction: publish the journal (create-exclusive)
+        # and drop the pending record — from here the run can never be rolled
+        # back by recovery
+        tmp = _runs_dir(store) + f"/_tmp-{run_id}.json"
+        hfs.write_text(spark, tmp, json.dumps({"run_id": run_id, "tables": heads}))
+        if not hfs.publish_without_overwrite(
+            spark, tmp, _runs_dir(store) + f"/{run_id}.json"
+        ):
+            # same run_id already finalized (a re-delivered streaming epoch
+            # whose content-hash skip made this run an empty no-op): drop the
+            # loser's temp, keep the original journal
+            hfs.delete(spark, tmp)
+        hfs.delete(spark, _runs_dir(store) + f"/{run_id}.pending.json")
 
-    edges = spark.read.parquet(_table_path(output_dir, "edges"))
-    review = spark.read.parquet(_table_path(output_dir, "review"))
-    profiles = spark.read.parquet(_table_path(output_dir, "profiles"))
+        edges = spark.read.parquet(_table_path(output_dir, "edges"))
+        review = spark.read.parquet(_table_path(output_dir, "review"))
+        profiles = spark.read.parquet(_table_path(output_dir, "profiles"))
 
-    # ── per-run metrics (counts on already-checkpointed small frames) ──
-    n_articles = articles.count()
-    n_delta = delta_entities.count()
-    n_matched = assignments.count()
-    n_upserts = upserts.count()
-    metrics = local_frame(
-        spark,
-        [
-            ("delta_articles", n_articles),
-            ("delta_entities", n_delta),
-            ("store_matched", n_matched),
-            ("new_entities", n_delta - n_matched),
-            ("entities_upserted", n_upserts),
-        ],
-        "stage string, rows long",
-    ).withColumn("run_id", F.lit(run_id))
-    _write(metrics, output_dir, "metrics")
+        # ── per-run metrics (counts on already-checkpointed small frames) ──
+        n_articles = articles.count()
+        n_delta = delta_entities.count()
+        n_matched = assignments.count()
+        n_upserts = upserts.count()
+        metrics = local_frame(
+            spark,
+            [
+                ("delta_articles", n_articles),
+                ("delta_entities", n_delta),
+                ("store_matched", n_matched),
+                ("new_entities", n_delta - n_matched),
+                ("entities_upserted", n_upserts),
+            ],
+            "stage string, rows long",
+        ).withColumn("run_id", F.lit(run_id))
+        _write(metrics, output_dir, "metrics")
 
-    for df in (nodes, clusters):
-        df.unpersist()
-
-    return {
-        "articles": articles,
-        "mentions": mentions,
-        "assignments": assignments,
-        "entities_delta": spark.read.parquet(
-            _table_path(output_dir, "entities_delta")
-        ),
-        "entities_store": st_entities.read_resolved(["entity_id"]),
-        "edges": edges,
-        "review": review,
-        "profiles": profiles,
-        "metrics": spark.read.parquet(_table_path(output_dir, "metrics")),
-    }
+        return {
+            "articles": articles,
+            "mentions": mentions,
+            "assignments": assignments,
+            "entities_delta": spark.read.parquet(
+                _table_path(output_dir, "entities_delta")
+            ),
+            "entities_store": st_entities.read_resolved(["entity_id"]),
+            "edges": edges,
+            "review": review,
+            "profiles": profiles,
+            "metrics": spark.read.parquet(_table_path(output_dir, "metrics")),
+        }

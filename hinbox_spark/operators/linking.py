@@ -392,12 +392,14 @@ def name_lsh_truncation_stats_from_entries(band_entries: DataFrame) -> DataFrame
     )
 
 
-def name_lsh_truncation_stats(nodes: DataFrame) -> DataFrame:
-    """Convenience wrapper: build band entries, then count truncation.
-    The pipeline passes its shared (checkpointed) band entries to
-    `name_lsh_truncation_stats_from_entries` instead so the signature pass
-    is not recomputed; this wrapper is the standalone/resume fallback."""
-    return name_lsh_truncation_stats_from_entries(name_lsh_band_entries(nodes))
+def name_lsh_truncation_stats(mentions: DataFrame) -> DataFrame:
+    """Convenience wrapper: build nodes and band entries, then count
+    truncation. The pipeline passes its shared (checkpointed) band entries
+    to `name_lsh_truncation_stats_from_entries` instead so the signature
+    pass is not recomputed; this wrapper is the standalone/resume fallback."""
+    return name_lsh_truncation_stats_from_entries(
+        name_lsh_band_entries(mention_nodes(mentions))
+    )
 
 
 def _pairs_minhash_names(

@@ -15,9 +15,17 @@ src/process_and_extract.py:545-565, re-expressed as tables):
   profiles   versioned profiles + grounding
   review     gray-band deferred pairs
   metrics    per-stage, per-partition counters (north_rule lineage)
+
+The extraction steps (`relevant_articles`, `extract_mentions`), the entity
+resolution chain (`resolve`: nodes → pairs → components → entities) and the
+background-work block (`overlap`) are shared with the delta path in
+`incremental.run_incremental`, so both runs build entities the same way.
 """
 
 from __future__ import annotations
+
+from concurrent import futures
+from typing import NamedTuple
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -135,6 +143,197 @@ def _with_profile_embedding(profiles: DataFrame, cfg: DomainConfig) -> DataFrame
     )
 
 
+def _rdd_ids(df: DataFrame) -> set[int]:
+    """Ids of the RDDs under a frame's plan leaves — a checkpointed frame's
+    leaf is the LogicalRDD holding its checkpoint blocks."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return {
+        leaf.rdd().id()
+        for leaf in (leaves.apply(i) for i in range(leaves.size()))
+        if leaf.getClass().getSimpleName() == "LogicalRDD"
+    }
+
+
+class overlap:
+    """The background Spark work of one run, released on every exit path.
+
+    ``submit`` runs a job-issuing function on a driver thread, so an
+    independent write overlaps the foreground chain; ``join`` waits for
+    everything submitted so far and raises the first background error.
+    Leaving the block joins every future, shuts the pool down, uncaches the
+    frames handed to ``release`` and unpersists every RDD persisted since
+    the block was entered (``DataFrame.unpersist`` leaves a local
+    checkpoint's blocks in place), except, when the block succeeds, the
+    RDDs under the frames handed to ``keep`` — the checkpoints a run
+    returns. A background error is re-raised only when no foreground error
+    is already propagating. Single-writer model, like the snapshot store:
+    RDDs another thread persists in the session while the block is open
+    are released too."""
+
+    def __init__(self, spark: SparkSession):
+        self._sc = spark.sparkContext
+
+    def __enter__(self) -> "overlap":
+        self._before = set(self._sc._jsc.getPersistentRDDs().keySet())
+        self._pool = futures.ThreadPoolExecutor(max_workers=4)
+        self._futures, self._cached, self._kept = [], [], set()
+        return self
+
+    def submit(self, fn, *args):
+        fut = self._pool.submit(fn, *args)
+        self._futures.append(fut)
+        return fut
+
+    def join(self) -> None:
+        pending, self._futures = self._futures, []
+        errors = [f.exception() for f in pending]  # waits for every future
+        first = next((e for e in errors if e is not None), None)
+        if first is not None:
+            raise first
+
+    def release(self, *cached: DataFrame) -> None:
+        self._cached.extend(cached)
+
+    def keep(self, *frames: DataFrame) -> None:
+        for df in frames:
+            self._kept |= _rdd_ids(df)
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        try:
+            self.join()
+        except Exception:
+            if exc_type is None:
+                raise
+        finally:
+            self._pool.shutdown(wait=True)
+            for df in self._cached:
+                df.unpersist()
+            # a failed run returns nothing, so nothing is kept
+            kept = self._kept if exc_type is None else set()
+            rdds = self._sc._jsc.getPersistentRDDs()
+            for rid in set(rdds.keySet()) - self._before - kept:
+                rdds.get(rid).unpersist(False)
+
+
+def relevant_articles(pages: DataFrame, cfg: DomainConfig) -> DataFrame:
+    """pages → scrubbed articles with the F4 relevance flag stamped while
+    the text is already flowing through the stage — downstream consumers
+    filter on the persisted boolean (parquet predicate pushdown) instead of
+    re-scanning text."""
+    return scrub_articles(extract_articles(pages), cfg).withColumn(
+        "is_relevant", relevance_predicate(cfg.relevance_keywords)
+    )
+
+
+def extract_mentions(
+    spark: SparkSession,
+    articles: DataFrame | None,
+    output_dir: str,
+    cfg: DomainConfig,
+    cache_stats: dict | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """Stage 2, returning (mentions, qc_flags). With ``articles`` given,
+    the cached or flagged extraction of its relevant rows runs as one FUSED
+    NER+write job: the extraction-QC flag rows (X3) ride the mentions table
+    with qc_flag set (null on mention rows) — no extra materialization
+    pass, no second commit. With ``articles`` None (resume) the table is
+    only read. The flag channel is sliced off by a pushdown-filtered read;
+    a table written before the column existed means "no flags"."""
+    if articles is not None:
+        # resume compatibility: an articles checkpoint written before the
+        # is_relevant column existed lacks it — stamp it on the fly (same
+        # guard skip_reason_summary uses)
+        if "is_relevant" not in articles.columns:
+            articles = articles.withColumn(
+                "is_relevant", relevance_predicate(cfg.relevance_keywords)
+            )
+        from hinbox_spark.config_loader import gazetteer_for
+
+        relevant = articles.filter(F.col("is_relevant"))
+        gaz = gazetteer_for(cfg)  # YAML-loaded entries when present, else default
+        if cfg.extraction_cache_path:
+            extracted = extract_mentions_cached(
+                relevant, gaz, cfg.extraction_cache_path, stats_out=cache_stats
+            )
+        else:
+            extracted = extract_mentions_with_flags(relevant, gaz)
+        _write(extracted, output_dir, "mentions", ["entity_type"])
+    raw = spark.read.parquet(_table_path(output_dir, "mentions"))
+    if "qc_flag" not in raw.columns:
+        return raw, local_frame(
+            spark, [], "url string, entity_type string, qc_flag string"
+        )
+    return (
+        raw.filter(F.col("qc_flag").isNull()).drop("qc_flag"),
+        raw.filter(F.col("qc_flag").isNotNull()).select(
+            "url", "entity_type", "qc_flag"
+        ),
+    )
+
+
+class Resolution(NamedTuple):
+    """`resolve`'s frames: ``nodes`` and ``clusters`` are cached (hand them
+    to `overlap.release`), ``entities`` is not materialized."""
+
+    nodes: DataFrame
+    band_entries: DataFrame
+    pairs: DataFrame
+    accepted: DataFrame
+    review: DataFrame
+    clusters: DataFrame
+    entities: DataFrame
+
+
+def resolve(
+    mentions: DataFrame, articles: DataFrame, cfg: DomainConfig
+) -> Resolution:
+    """Entity resolution over one set of mentions: blocking → match scoring
+    → dispute arbitration → connected components → canonicalization. The
+    batch build resolves its whole corpus with it, a delta run its delta
+    before linking to the store. The operators are looked up in this
+    module's namespace at call time, so a patch on `pipeline` reaches both
+    entry points."""
+    nodes = mention_nodes(mentions).cache()
+    # the B5 MinHash signature pass (the one pandas-UDF job of the
+    # blocking family) is computed ONCE and shared: pairing reads it, and
+    # the batch metrics stage derives its truncation counters from the
+    # same checkpointed entries instead of re-running the pass
+    band_entries = name_lsh_band_entries(nodes).localCheckpoint(eager=False)
+    # pairs is checkpointed so the review/score materialization and the
+    # decisions anti-joins share one blocking-family computation
+    pairs = candidate_pairs(
+        nodes, cfg, band_entries=band_entries
+    ).localCheckpoint(eager=False)
+    node_vecs = node_evidence_embeddings(nodes, mentions, articles, cfg)
+    accepted, review = score_pairs(pairs, nodes, node_vecs, cfg)
+    # second-stage dispute arbitration (merge_dispute_agent parity): a
+    # deterministic richer-feature pass over the gray-band rows can
+    # override in both directions — merges feed back as clustering edges,
+    # skips are final, defers stay queued for humans. The arbitrated set is
+    # eagerly checkpointed: the review write, the queue append and the
+    # decisions aggregates all consume the same materialized blocks.
+    review = arbitrate_review(review).localCheckpoint()
+    dispute_merges = review.filter(F.col("decision") == "merge").select(
+        "src", "dst", "entity_type",
+        F.lit("dispute_merge").alias("reason"), "sim",
+    )
+    # materialize the (tiny, pair-level) accepted-edge set once, NOW —
+    # clustering and the callers' background jobs consume it from several
+    # threads, and an eager checkpoint removes any double-materialization
+    # race a lazy one would allow
+    accepted = accepted.unionByName(dispute_merges).localCheckpoint()
+    labels = connected_components(
+        nodes.select("node_id"), accepted.select("src", "dst")
+    )
+    clusters = build_clusters(mentions, nodes, labels, articles).cache()
+    entities = _with_search_embedding(
+        build_entities(clusters, canonical_names(clusters)), cfg
+    )
+    return Resolution(
+        nodes, band_entries, pairs, accepted, review, clusters, entities
+    )
+
+
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
@@ -148,9 +347,10 @@ def run_pipeline(
 
     When ``stage_times`` is a dict, wall-clock seconds per coarse stage
     block are recorded into it (extract / link_score / cluster_entities /
-    edges_profiles / metrics). Blocks overlap background writes, so the
-    numbers are boundary-to-boundary wall time on the driver thread — a
-    diagnosis aid for the bench sidecar, not disjoint CPU accounting."""
+    edges_profiles / metrics; link_score is the whole `resolve` chain).
+    Blocks overlap background writes, so the numbers are
+    boundary-to-boundary wall time on the driver thread — a diagnosis aid
+    for the bench sidecar, not disjoint CPU accounting."""
     import time as _time
 
     _t_block = _time.monotonic()
@@ -162,10 +362,10 @@ def run_pipeline(
             stage_times[name] = round(now - _t_block, 3)
             _t_block = now
 
-    cfg = cfg or get_default_config()
-    from hinbox_spark.config_loader import gazetteer_for
+    def done(*names: str) -> bool:
+        return resume and all(_done(spark, output_dir, n) for n in names)
 
-    gaz = gazetteer_for(cfg)  # YAML-loaded entries when present, else default
+    cfg = cfg or get_default_config()
     hfs.mkdirs(spark, output_dir)
 
     # run-level counters (filled by the stages below when they execute;
@@ -174,265 +374,92 @@ def run_pipeline(
     # shared B5 band entries (set by the linking block; None on resume)
     band_entries = None
 
-    import sys
-    from concurrent.futures import ThreadPoolExecutor
-
-    # ── stages 1-2: articles ∥ mentions ──
-    # The measured 480k-page Amdahl residue is the chain of sequential
-    # stage commits, so when both stages run this session the articles
-    # table's parquet commit overlaps mention extraction: the parsed
-    # articles are eagerly localCheckpoint'ed (the HTML parse runs ONCE),
-    # the articles write goes to a background thread, and the NER pass
-    # consumes the same blocks concurrently. The extraction-QC flag rows
-    # (X3) ride the mentions table itself (qc_flag null on mention rows)
-    # so the NER+write job stays FUSED — no extra materialization pass,
-    # no second commit; readers slice the table by qc_flag. F4: only
-    # relevance-passing articles reach the NER stage — the rest land in
-    # the skip-reason counters.
-    stage2_needed = not (resume and _done(spark, output_dir, "mentions"))
-    pool = ThreadPoolExecutor(max_workers=2)
-    background = []  # in-flight concurrent writes, joined in finally
-    ckpts = []       # checkpointed inputs, unpersisted in finally
-    try:
-        if not (resume and _done(spark, output_dir, "articles")):
-            # F4 relevance is stamped HERE, while the text is already
-            # flowing through the stage — downstream consumers filter on
-            # the persisted boolean (parquet predicate pushdown) instead
-            # of re-scanning text
-            articles = scrub_articles(extract_articles(pages), cfg).withColumn(
-                "is_relevant", relevance_predicate(cfg.relevance_keywords)
-            )
-            if stage2_needed:
+    with overlap(spark) as ov:
+        # ── stages 1-2: articles ∥ mentions ──
+        # The measured 480k-page Amdahl residue is the chain of sequential
+        # stage commits, so when both stages run this session the articles
+        # table's parquet commit overlaps mention extraction: the parsed
+        # articles are eagerly localCheckpoint'ed (the HTML parse runs
+        # ONCE), the articles write goes to a background thread, and the
+        # NER pass consumes the same blocks concurrently. F4: only
+        # relevance-passing articles reach the NER stage — the rest land
+        # in the skip-reason counters.
+        extract = not done("mentions")
+        if not done("articles"):
+            articles = relevant_articles(pages, cfg)
+            if extract:
                 articles = articles.localCheckpoint()  # parse once, eager
-                ckpts.append(articles)
-                background.append(
-                    pool.submit(_write, articles, output_dir, "articles")
-                )
+                ov.submit(_write, articles, output_dir, "articles")
             else:
                 _write(articles, output_dir, "articles")
-                articles = spark.read.parquet(_table_path(output_dir, "articles"))
-        else:
+        elif extract:
             articles = spark.read.parquet(_table_path(output_dir, "articles"))
+        mentions, qc_flags = extract_mentions(
+            spark, articles if extract else None, output_dir, cfg, cache_stats
+        )
+        ov.join()
+        _mark("extract")
+        articles = spark.read.parquet(_table_path(output_dir, "articles"))
 
-        if stage2_needed:
-            # resume compatibility: an articles checkpoint written before
-            # the is_relevant column existed lacks it — stamp it on the
-            # fly (same guard skip_reason_summary uses)
-            if "is_relevant" not in articles.columns:
-                articles = articles.withColumn(
-                    "is_relevant", relevance_predicate(cfg.relevance_keywords)
+        # ── stages 3-5: linking → clustering → canonicalization ──
+        # the gate must include EVERY table the block writes — profiles is
+        # written last, so a crash between edges and profiles would
+        # otherwise leave a resume state that skips the block and then
+        # fails reading the missing profiles table (wedged checkpoint dir)
+        if not done("entities", "edges", "review", "decisions", "profiles"):
+            r = resolve(mentions, articles, cfg)
+            ov.release(r.nodes, r.clusters)
+            band_entries = r.band_entries
+            _mark("link_score")
+
+            # A1 parity: merge-decision counters (reference MergeStats —
+            # merged/skipped/disputed per type/reason) as a metrics table.
+            # skipped = candidate pairs that neither merged nor deferred
+            # (failed the match check / a guard) — lazy anti-joins,
+            # evaluated once at the decisions write.
+            skipped = (
+                r.pairs.join(r.accepted.select("src", "dst"), ["src", "dst"], "left_anti")
+                .join(r.review.select("src", "dst"), ["src", "dst"], "left_anti")
+                .join(
+                    r.nodes.select(F.col("node_id").alias("src"), "entity_type"),
+                    "src",
                 )
-            relevant = articles.filter(F.col("is_relevant"))
-            if cfg.extraction_cache_path:
-                extracted = extract_mentions_cached(
-                    relevant, gaz, cfg.extraction_cache_path,
-                    stats_out=cache_stats,
-                )
-            else:
-                extracted = extract_mentions_with_flags(relevant, gaz)
-            # one FUSED NER+write job (flag rows included, qc_flag null on
-            # mention rows — a handful of flag rows per million articles)
-            _write(extracted, output_dir, "mentions", ["entity_type"])
-    finally:
-        # join background writes before unwinding (same discipline as the
-        # linking block): bg errors surface on the happy path, a
-        # foreground error stays primary during an unwind
-        bg_error = None
-        for fut in background:
-            try:
-                fut.result()
-            except Exception as exc:
-                if bg_error is None:
-                    bg_error = exc
-        pool.shutdown(wait=True)
-        for df in ckpts:
-            df.unpersist()
-        if bg_error is not None and sys.exc_info()[0] is None:
-            raise bg_error
-    _mark("extract")
-
-    articles = spark.read.parquet(_table_path(output_dir, "articles"))
-    mentions_raw = spark.read.parquet(_table_path(output_dir, "mentions"))
-    # slice the flag channel off the mentions table (parquet filter
-    # pushdown — qc_flag IS NULL on every mention row); checkpoints
-    # written before the column existed mean "no flags"
-    if "qc_flag" in mentions_raw.columns:
-        mentions = mentions_raw.filter(F.col("qc_flag").isNull()).drop("qc_flag")
-        qc_flags = mentions_raw.filter(F.col("qc_flag").isNotNull()).select(
-            "url", "entity_type", "qc_flag"
-        )
-    else:
-        mentions = mentions_raw
-        qc_flags = local_frame(
-            spark, [], "url string, entity_type string, qc_flag string"
-        )
-
-    def _metrics_early() -> DataFrame:
-        """The metrics rows that need only pages/articles/mentions — the
-        EXPENSIVE scans of the metrics stage (skip-reason partition of the
-        whole page set, QC flag slice, B5 truncation counters). These run
-        in the FINAL metrics stage, where the cluster is otherwise idle:
-        overlapping them with the clustering chain from a background
-        thread was tried and measured SLOWER (see the note in the linking
-        block) — the fat pages scan evicts the cached clustering inputs."""
-        m = _stage_counts(articles, "articles").unionByName(
-            _stage_counts(mentions, "mentions")
-        )
-        # A2: per-reason skip counters
-        m = m.unionByName(
-            skip_reason_summary(
-                pages, articles, mentions, cfg.relevance_keywords
-            ).select(
-                F.when(F.col("reason") == "processed", F.lit("processed"))
-                .otherwise(F.concat(F.lit("skip_"), "reason"))
-                .alias("stage"),
-                F.lit(-1).alias("partition_id"),
-                F.col("n").alias("rows"),
-            )
-        )
-        # X3: extraction-QC flag counters next to the skip reasons — one
-        # pushdown-filtered slice of the mentions table
-        m = m.unionByName(
-            qc_flags.groupBy("qc_flag")
-            .agg(F.count("*").alias("rows"))
-            .select(
-                F.concat(F.lit("qc_"), "qc_flag").alias("stage"),
-                F.lit(-1).alias("partition_id"),
-                "rows",
-            )
-        )
-        # B5 truncation: dropped name-LSH buckets are counted, not silent.
-        # When the linking block ran this session the counters derive from
-        # the SAME checkpointed band entries (no signature recompute);
-        # only a resumed run that skipped linking but lost its metrics
-        # pays the standalone fallback.
-        trunc = (
-            name_lsh_truncation_stats_from_entries(band_entries)
-            if band_entries is not None
-            else name_lsh_truncation_stats(mention_nodes(mentions))
-        )
-        m = m.unionByName(
-            trunc.select(
-                "stage", F.lit(-1).alias("partition_id"),
-                F.col("n").alias("rows"),
-            )
-        )
-        run_counters = {
-            # A10: extraction-cache hit/miss counters
-            **{f"extraction_cache_{k}": v for k, v in cache_stats.items()},
-            # F2 skip-if-unchanged analog: cache hits = articles whose
-            # content hash was already extracted in a previous run
-            "skip_unchanged_hash": cache_stats.get("hits", 0),
-        }
-        if run_counters:
-            # partition_id −1 = run-level counter, not tied to a partition
-            m = m.unionByName(
-                local_frame(
-                    spark,
-                    [(k, -1, v) for k, v in run_counters.items()],
-                    "stage string, partition_id int, rows long",
-                )
-            )
-        return m
-
-
-
-    # ── stages 3-5: linking → clustering → canonicalization ──
-    # the gate must include EVERY table the block writes — profiles is
-    # written last, so a crash between edges and profiles would otherwise
-    # leave a resume state that skips the block and then fails reading the
-    # missing profiles table (wedged checkpoint dir)
-    if not (resume and _done(spark, output_dir, "entities") and _done(spark, output_dir, "edges")
-            and _done(spark, output_dir, "review") and _done(spark, output_dir, "decisions")
-            and _done(spark, output_dir, "profiles")):
-        nodes = mention_nodes(mentions).cache()
-        # the B5 MinHash signature pass (the one pandas-UDF job of the
-        # blocking family) is computed ONCE and shared: pairing reads it,
-        # and the metrics stage derives its truncation counters from the
-        # same checkpointed entries instead of re-running the pass
-        band_entries = name_lsh_band_entries(nodes).localCheckpoint(eager=False)
-        # pairs is checkpointed so the review/score materialization and the
-        # decisions anti-joins share one blocking-family computation
-        pairs = candidate_pairs(
-            nodes, cfg, band_entries=band_entries
-        ).localCheckpoint(eager=False)
-        node_vecs = node_evidence_embeddings(nodes, mentions, articles, cfg)
-        accepted, review = score_pairs(pairs, nodes, node_vecs, cfg)
-        # second-stage dispute arbitration (merge_dispute_agent parity):
-        # a deterministic richer-feature pass over the gray-band rows can
-        # override in both directions — merges feed back as clustering
-        # edges, skips are final, defers stay queued for humans. The
-        # arbitrated set is eagerly checkpointed: the review write, the
-        # queue append, and the decisions aggregates all consume the same
-        # materialized blocks, and the write itself moves to a background
-        # thread instead of serializing the chain.
-        review = arbitrate_review(review).localCheckpoint()
-        dispute_merges = review.filter(F.col("decision") == "merge").select(
-            "src", "dst", "entity_type",
-            F.lit("dispute_merge").alias("reason"), "sim",
-        )
-        accepted = accepted.unionByName(dispute_merges)
-        # materialize the (tiny, pair-level) accepted-edge set once, NOW —
-        # the decisions job and the clustering chain consume it from two
-        # threads below, and an eager checkpoint removes any double-
-        # materialization race a lazy one would allow
-        accepted = accepted.localCheckpoint()
-        _mark("link_score")
-
-        # A1 parity: merge-decision counters (reference MergeStats —
-        # merged/skipped/disputed per type/reason) as a metrics table.
-        # skipped = candidate pairs that neither merged nor deferred
-        # (failed the match check / a guard) — lazy anti-joins, evaluated
-        # once at the decisions write.
-        skipped = (
-            pairs.join(accepted.select("src", "dst"), ["src", "dst"], "left_anti")
-            .join(review.select("src", "dst"), ["src", "dst"], "left_anti")
-            .join(
-                nodes.select(F.col("node_id").alias("src"), "entity_type"), "src"
-            )
-            .groupBy("entity_type", "reason")
-            .agg(F.count("*").alias("n"))
-            .withColumn("decision", F.lit("skipped"))
-        )
-        decisions = (
-            accepted.groupBy("entity_type", "reason")
-            .agg(F.count("*").alias("n"))
-            .withColumn("decision", F.lit("merged"))
-            .unionByName(
-                # still-deferred rows are the open disputes; arbitration
-                # merges are already counted under merged/dispute_merge
-                review.filter(F.col("decision") == "defer")
-                .groupBy("entity_type")
+                .groupBy("entity_type", "reason")
                 .agg(F.count("*").alias("n"))
-                .withColumn("reason", F.lit("gray_band"))
-                .withColumn("decision", F.lit("disputed"))
-                .select("entity_type", "reason", "n", "decision")
-            )
-            .unionByName(
-                review.filter(F.col("decision") == "skip")
-                .groupBy("entity_type")
-                .agg(F.count("*").alias("n"))
-                .withColumn("reason", F.lit("dispute_skip"))
                 .withColumn("decision", F.lit("skipped"))
-                .select("entity_type", "reason", "n", "decision")
             )
-            .unionByName(skipped.select("entity_type", "reason", "n", "decision"))
-        )
-        # the review/queue/decisions jobs are independent of the
-        # clustering → canonicalization chain (all read only checkpointed
-        # inputs), so they run as CONCURRENT Spark jobs from driver
-        # threads — at 4N cores the serial tail is ~30% of the run, and
-        # overlapping independent jobs is what converts spare cores into
-        # wall-clock (at N cores everything is compute-bound and the
-        # overlap costs nothing)
-        pool = ThreadPoolExecutor(max_workers=4)
-        background = []  # in-flight concurrent writes, joined in finally
-        # cached/checkpointed inputs, unpersisted in finally
-        cached = [nodes, review, accepted]
-        try:
-            background.append(
-                pool.submit(_write, review, output_dir, "review")
+            decisions = (
+                r.accepted.groupBy("entity_type", "reason")
+                .agg(F.count("*").alias("n"))
+                .withColumn("decision", F.lit("merged"))
+                .unionByName(
+                    # still-deferred rows are the open disputes; arbitration
+                    # merges are already counted under merged/dispute_merge
+                    r.review.filter(F.col("decision") == "defer")
+                    .groupBy("entity_type")
+                    .agg(F.count("*").alias("n"))
+                    .withColumn("reason", F.lit("gray_band"))
+                    .withColumn("decision", F.lit("disputed"))
+                    .select("entity_type", "reason", "n", "decision")
+                )
+                .unionByName(
+                    r.review.filter(F.col("decision") == "skip")
+                    .groupBy("entity_type")
+                    .agg(F.count("*").alias("n"))
+                    .withColumn("reason", F.lit("dispute_skip"))
+                    .withColumn("decision", F.lit("skipped"))
+                    .select("entity_type", "reason", "n", "decision")
+                )
+                .unionByName(skipped.select("entity_type", "reason", "n", "decision"))
             )
+            # the review/queue/decisions jobs are independent of the
+            # canonicalization chain (all read only checkpointed inputs),
+            # so they run as CONCURRENT Spark jobs from driver threads — at
+            # 4N cores the serial tail is ~30% of the run, and overlapping
+            # independent jobs is what converts spare cores into
+            # wall-clock (at N cores everything is compute-bound and the
+            # overlap costs nothing)
+            ov.submit(_write, r.review, output_dir, "review")
             if cfg.snapshot_store_path:
                 # append-only review queue (reference parity: the dispute
                 # queue is append-only JSONL — humans drain it across
@@ -442,18 +469,14 @@ def run_pipeline(
 
                 from hinbox_spark.tables import SnapshotTable as _ST
 
-                background.append(
-                    pool.submit(
-                        _ST(
-                            spark,
-                            cfg.snapshot_store_path.rstrip("/") + "/review_queue",
-                        ).append,
-                        review.withColumn("run_id", F.lit(_uuid.uuid4().hex)),
-                    )
+                ov.submit(
+                    _ST(
+                        spark,
+                        cfg.snapshot_store_path.rstrip("/") + "/review_queue",
+                    ).append,
+                    r.review.withColumn("run_id", F.lit(_uuid.uuid4().hex)),
                 )
-            background.append(
-                pool.submit(_write, decisions, output_dir, "decisions")
-            )
+            ov.submit(_write, decisions, output_dir, "decisions")
             # NOTE: overlapping the expensive half of the metrics stage
             # (full pages/articles/mentions scans) with the clustering
             # chain from a background thread was tried and MEASURED SLOWER
@@ -463,17 +486,7 @@ def run_pipeline(
             # slots, stretching the critical path. The metrics scans stay
             # in the final stage where the cluster is otherwise idle.
 
-            labels = connected_components(
-                nodes.select("node_id"), accepted.select("src", "dst")
-            )
-            mention_clusters = build_clusters(
-                mentions, nodes, labels, articles
-            ).cache()
-            cached.append(mention_clusters)
-            canon = canonical_names(mention_clusters)
-            entities = build_entities(mention_clusters, canon)
-            entities = _with_search_embedding(entities, cfg)
-            _write(entities, output_dir, "entities", ["entity_type"])
+            _write(r.entities, output_dir, "entities", ["entity_type"])
             entities = spark.read.parquet(_table_path(output_dir, "entities"))
 
             # optional Iceberg-shaped entity store: publish this run's
@@ -488,15 +501,14 @@ def run_pipeline(
                 ).merge(entities)
 
             _mark("cluster_entities")
-            # edges and profiles both read only the cached mention_clusters
-            # and the written entities table — independent jobs, overlapped
-            # the same way as decisions
-            edges = build_edge_triples(mention_clusters, entities)
-            edges_future = pool.submit(_write, edges, output_dir, "edges", ["pred"])
-            background.append(edges_future)
+            # edges and profiles both read only the cached clusters and the
+            # written entities table — independent jobs, overlapped the
+            # same way as decisions
+            edges = build_edge_triples(r.clusters, entities)
+            edges_future = ov.submit(_write, edges, output_dir, "edges", ["pred"])
 
             # ── stage 6: profiles + grounding ──
-            profiles = build_profiles(mention_clusters, entities)
+            profiles = build_profiles(r.clusters, entities)
             profiles = ground_profiles(profiles, articles)
             profiles = _with_profile_embedding(profiles, cfg)
             _write(profiles, output_dir, "profiles")
@@ -512,51 +524,91 @@ def run_pipeline(
 
                 edges_future.result()
                 seed_store_from_run(
-                    spark, cfg, mention_clusters, entities, articles,
+                    spark, cfg, r.clusters, entities, articles,
                     spark.read.parquet(_table_path(output_dir, "profiles")),
                     spark.read.parquet(_table_path(output_dir, "edges")),
                 )
             _mark("edges_profiles")
-        finally:
-            # join the concurrent writes BEFORE unwinding — a failure in
-            # the foreground chain must not leave background writes racing
-            # the exception path, and the pool/cached inputs are released
-            # on every path. A background write error surfaces on the
-            # happy path; during an unwind the foreground error stays
-            # primary and the join is best-effort.
-            bg_error = None
-            for fut in background:
-                try:
-                    fut.result()
-                except Exception as exc:
-                    if bg_error is None:
-                        bg_error = exc
-            pool.shutdown(wait=True)
-            for df in cached:
-                df.unpersist()
-            if bg_error is not None and sys.exc_info()[0] is None:
-                raise bg_error
+            ov.join()
 
-    entities = spark.read.parquet(_table_path(output_dir, "entities"))
-    edges = spark.read.parquet(_table_path(output_dir, "edges"))
-    profiles = spark.read.parquet(_table_path(output_dir, "profiles"))
-    review = spark.read.parquet(_table_path(output_dir, "review"))
+        entities = spark.read.parquet(_table_path(output_dir, "entities"))
+        edges = spark.read.parquet(_table_path(output_dir, "edges"))
+        profiles = spark.read.parquet(_table_path(output_dir, "profiles"))
+        review = spark.read.parquet(_table_path(output_dir, "review"))
 
-    # ── metrics table: per-stage / per-partition lineage counters ──
-    # partition_id is persisted at write time by _write, so the late half
-    # is one column-pruned scan per small table; the early half scans the
-    # big tables on an otherwise-idle cluster (overlapping it with the
-    # clustering chain measured slower — see the note in the linking block)
-    if not (resume and _done(spark, output_dir, "metrics")):
-        m = (
-            _metrics_early()
-            .unionByName(_stage_counts(entities, "entities"))
-            .unionByName(_stage_counts(edges, "edges"))
-            .unionByName(_stage_counts(profiles, "profiles"))
-            .unionByName(_stage_counts(review, "review"))
-        )
-        _write(m, output_dir, "metrics")
-    _mark("metrics")
+        # ── metrics table: per-stage / per-partition lineage counters ──
+        # partition_id is persisted at write time by _write, so the late
+        # half is one column-pruned scan per small table; the early half
+        # scans the big tables on an otherwise-idle cluster (overlapping it
+        # with the clustering chain measured slower — see the note in the
+        # linking block)
+        if not done("metrics"):
+            m = _stage_counts(articles, "articles").unionByName(
+                _stage_counts(mentions, "mentions")
+            )
+            # A2: per-reason skip counters
+            m = m.unionByName(
+                skip_reason_summary(
+                    pages, articles, mentions, cfg.relevance_keywords
+                ).select(
+                    F.when(F.col("reason") == "processed", F.lit("processed"))
+                    .otherwise(F.concat(F.lit("skip_"), "reason"))
+                    .alias("stage"),
+                    F.lit(-1).alias("partition_id"),
+                    F.col("n").alias("rows"),
+                )
+            )
+            # X3: extraction-QC flag counters next to the skip reasons —
+            # one pushdown-filtered slice of the mentions table
+            m = m.unionByName(
+                qc_flags.groupBy("qc_flag")
+                .agg(F.count("*").alias("rows"))
+                .select(
+                    F.concat(F.lit("qc_"), "qc_flag").alias("stage"),
+                    F.lit(-1).alias("partition_id"),
+                    "rows",
+                )
+            )
+            # B5 truncation: dropped name-LSH buckets are counted, not
+            # silent. When the linking block ran this session the counters
+            # derive from the SAME checkpointed band entries (no signature
+            # recompute); only a resumed run that skipped linking but lost
+            # its metrics pays the standalone fallback.
+            trunc = (
+                name_lsh_truncation_stats_from_entries(band_entries)
+                if band_entries is not None
+                else name_lsh_truncation_stats(mentions)
+            )
+            m = m.unionByName(
+                trunc.select(
+                    "stage", F.lit(-1).alias("partition_id"),
+                    F.col("n").alias("rows"),
+                )
+            )
+            run_counters = {
+                # A10: extraction-cache hit/miss counters
+                **{f"extraction_cache_{k}": v for k, v in cache_stats.items()},
+                # F2 skip-if-unchanged analog: cache hits = articles whose
+                # content hash was already extracted in a previous run
+                "skip_unchanged_hash": cache_stats.get("hits", 0),
+            }
+            if run_counters:
+                # partition_id −1 = run-level counter, not tied to a partition
+                m = m.unionByName(
+                    local_frame(
+                        spark,
+                        [(k, -1, v) for k, v in run_counters.items()],
+                        "stage string, partition_id int, rows long",
+                    )
+                )
+            m = (
+                m.unionByName(_stage_counts(entities, "entities"))
+                .unionByName(_stage_counts(edges, "edges"))
+                .unionByName(_stage_counts(profiles, "profiles"))
+                .unionByName(_stage_counts(review, "review"))
+            )
+            _write(m, output_dir, "metrics")
+        _mark("metrics")
 
     return {
         "articles": articles,

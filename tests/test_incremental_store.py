@@ -324,7 +324,7 @@ def test_acronym_family_never_pairs_two_long_forms(spark):
     assert got.get("d2", (None, None))[1] == "acronym"  # short x long: yes
 
 
-def test_crash_mid_apply_recovers_exactly_once(spark, monkeypatch):
+def test_crash_mid_apply_recovers_exactly_once(spark, monkeypatch, delta_world):
     """Run transaction: a crash AFTER some store commits landed (entities
     merge, facts append) but BEFORE the run finalized leaves a pending
     journal; the retry rolls every table back to its pre-run head and
@@ -332,26 +332,12 @@ def test_crash_mid_apply_recovers_exactly_once(spark, monkeypatch):
     counters are never double-merged, pages never skipped-forever."""
     import hinbox_spark.incremental as incmod
 
-    pages, _ = pages_dataframe(spark, 40, 3)
-    urls = sorted(r.url for r in pages.select("url").collect())
-    pages_a = pages.filter(F.col("url").isin(set(urls[:30]))).localCheckpoint()
-    pages_b = pages.filter(F.col("url").isin(set(urls[30:]))).localCheckpoint()
-
-    def build_store():
-        store = tempfile.mkdtemp()
-        cfg = dataclasses.replace(
-            get_default_config(), snapshot_store_path=store
-        )
-        run_pipeline(spark, pages_a, tempfile.mkdtemp(), cfg=cfg, resume=False)
-        return store, cfg
-
-    # control: clean application
-    store_ok, cfg_ok = build_store()
-    run_incremental(spark, pages_b, tempfile.mkdtemp(), cfg=cfg_ok, run_id="d")
+    # control: clean application of the same delta to the same bootstrap
+    store_ok, pages_b = delta_world["store"], delta_world["pages_b"]
 
     # crash world: profiles rebuild raises AFTER the concurrent commits
     # were submitted (entities/facts/cited/edges/queue may have landed)
-    store_cr, cfg_cr = build_store()
+    store_cr, cfg_cr = delta_world["fork"]()
     real = incmod._rebuild_profiles
 
     def boom(*a, **k):

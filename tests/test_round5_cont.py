@@ -308,6 +308,7 @@ def test_hits_and_bm25_partitioning_invariant(spark):
         q_copurchase_hits, q_doc_bm25_search,
     )
 
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
     for fn in (q_copurchase_hits, q_doc_bm25_search):
         outs = []
         for parts in ("1", "17"):
@@ -315,7 +316,7 @@ def test_hits_and_bm25_partitioning_invariant(spark):
             try:
                 outs.append([tuple(r) for r in fn(spark, SF).collect()])
             finally:
-                spark.conf.unset("spark.sql.shuffle.partitions")
+                spark.conf.set("spark.sql.shuffle.partitions", prev)
         assert outs[0] == outs[1], fn.__name__
 
 

@@ -5,6 +5,7 @@ EFFECTS from the content-hash skip under foreachBatch's at-least-once
 contract), and per-epoch run tables land under the output root."""
 
 import dataclasses
+import shutil
 
 import pyspark.sql.functions as F
 
@@ -35,6 +36,9 @@ def test_stream_kg_ingest_matches_batch_and_redrain_is_noop(spark, tmp_path):
     # bootstrap the store with a batch run over corpus A (the documented
     # operating mode), then stream corpus B in as micro-batches
     run_pipeline(spark, pages_a, str(tmp_path / "boot"), cfg=cfg, resume=False)
+    # the batch reference below starts from a copy of the same bootstrap
+    store2 = str(tmp_path / "store2")
+    shutil.copytree(store, store2)
 
     src = str(tmp_path / "incoming")
     ckpt = str(tmp_path / "ckpt")
@@ -52,10 +56,8 @@ def test_stream_kg_ingest_matches_batch_and_redrain_is_noop(spark, tmp_path):
         for r in _store_entities(spark, store).collect()
     }
 
-    # batch reference: bootstrap(A) + one incremental(B) into a fresh store
-    store2 = str(tmp_path / "store2")
+    # batch reference: one incremental(B) onto the copied bootstrap(A)
     cfg2 = dataclasses.replace(get_default_config(), snapshot_store_path=store2)
-    run_pipeline(spark, pages_a, str(tmp_path / "boot2"), cfg=cfg2, resume=False)
     from hinbox_spark.incremental import run_incremental
 
     run_incremental(spark, pages_b, str(tmp_path / "inc2"), cfg=cfg2)
