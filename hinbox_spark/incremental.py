@@ -130,7 +130,7 @@ def seed_store_from_run(
     # instead of re-deriving them from all store entities
     idx = name_index_rows(entities).localCheckpoint()
     _st(spark, store, NAME_INDEX).append(idx)
-    _st(spark, store, NAME_BANDS).append(name_band_rows(idx))
+    _st(spark, store, NAME_BANDS).append(name_band_rows(idx, cfg))
     _st(spark, store, PAGES_LOG).append(
         articles.select("url", "content_hash").withColumn(
             "run_id", F.lit("bootstrap")
@@ -700,7 +700,9 @@ def run_incremental(
         # index rows are deduped at read and folded by compaction
         idx_new = name_index_rows(upserts).localCheckpoint()
         ov.submit(_st(spark, store, NAME_INDEX).append, idx_new)
-        ov.submit(_st(spark, store, NAME_BANDS).append, name_band_rows(idx_new))
+        ov.submit(
+            _st(spark, store, NAME_BANDS).append, name_band_rows(idx_new, cfg)
+        )
         # profiles rebuild is the long pole — run it on the main thread
         _profiles_task()
         ov.join()

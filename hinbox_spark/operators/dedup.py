@@ -28,6 +28,19 @@ _H2 = np.uint64(0xC2B2AE3D27D4EB4F)
 _H3 = np.uint64(0x165667B19E3779F9)
 
 
+def over_cap_keys(
+    entries: DataFrame, key_cols: list[str], cap, size=None
+) -> DataFrame:
+    """(*key_cols, bucket_n) of the buckets of `entries` holding more than
+    `cap` — the over-cap key set `capped_bucket_entries` broadcasts back as
+    a left_anti join. `cap` is an int or a Column over the key columns
+    (a per-bucket cap; null leaves the bucket uncapped); `size` is the
+    bucket-size aggregate, `count(*)` by default."""
+    size = F.count("*") if size is None else size
+    counts = entries.groupBy(*key_cols).agg(size.alias("bucket_n"))
+    return counts.filter(F.col("bucket_n") > cap)
+
+
 def capped_bucket_entries(
     entries: DataFrame,
     key_cols: list[str],
@@ -59,8 +72,7 @@ def capped_bucket_entries(
     """
     if reuse:
         entries = entries.localCheckpoint(eager=False)
-    counts = entries.groupBy(*key_cols).agg(F.count("*").alias("bucket_n"))
-    over = counts.filter(F.col("bucket_n") > cap)
+    over = over_cap_keys(entries, key_cols, cap)
     if stats_out is not None:
         row = over.agg(
             F.count("*").alias("b"), F.sum("bucket_n").alias("e")

@@ -215,9 +215,11 @@ def ground_profiles(profiles: DataFrame, articles: DataFrame) -> DataFrame:
 
         return text.map(per_profile)
 
-    # the report self-joins profiles; checkpoint so the applyInPandas
-    # assembly runs once, not three times
-    profiles = profiles.localCheckpoint(eager=False)
+    # the report self-joins profiles; checkpoint EAGERLY so the
+    # applyInPandas assembly runs once — under a lazy checkpoint the two
+    # independent stages that consume it run concurrently and each
+    # computes the fold
+    profiles = profiles.localCheckpoint()
 
     cited = (
         profiles.select(

@@ -11,24 +11,31 @@ scales with |delta| (+ blocking-key lookups into the store), not |corpus|.
 
 Blocking is BIPARTITE (delta side × store side) so the store never
 self-joins: at 10¹² accumulated documents the store holds ~10⁸-10⁹
-entities, and any same-side pairing would dwarf the delta work. Each family
-mirrors its batch sibling in `operators/linking.py`:
+entities, and any same-side pairing would dwarf the delta work. Both sides
+are blocking-key rows in the batch shape (`linking.KEY_SCHEMA`): the delta
+side from the batch key pass (`linking.blocking_keys`) over its name rows,
+the store side rebuilt in the JVM from the persisted name index
+(`name_index_rows`, `name_band_rows`). One count applies the caps, one join
+on (entity_type, family, key) proposes every pair, and each family's
+candidates are a slice of that join:
 
   exact_key     normalized-name equality across sides (B1 analog — in the
                 batch path identical keys collapse into one node by
-                construction; across runs they meet here)
-  equivalence   config synonym groups, broadcast (B2)
-  acronym       long-form derived acronym = short-form letters (B3)
-  containment   shared-token blocking + word-boundary containment verify,
-                token df-cap on the STORE side (B4)
-  name_lsh      MinHash name-LSH band entries joined across sides, per-side
-                bucket caps + per-delta-entity candidate cap (B5)
+                construction; across runs they meet here); a key shared by
+                more than NAME_LSH_BUCKET_CAP store entities is dropped
+  equivalence   config synonym groups (B2)
+  acronym       long form on one side, short form on the other (B3)
+  containment   shared significant token + word-boundary containment
+                verify (B4), token df-cap on the STORE side
+  name_lsh      shared MinHash band bucket (B5), per-side bucket caps +
+                per-delta-entity candidate cap
 
-Scoring reuses the batch match-check semantics (J6-J9): deterministic
-families accept outright (subject to the low-quality-name guard and the
-events date rule); LSH proposals need cosine(search_embedding) ≥ τ(type)
-AND name-3-gram Jaccard ≥ 0.5, with the τ±band low-confidence slice routed
-to the review queue and second-stage arbitration (`arbitrate_review`).
+Scoring is the batch match check (`linking.match_scores`, J6-J9):
+deterministic families accept outright (subject to the low-quality-name
+guard and the events date rule); LSH proposals need cosine(search_embedding)
+≥ τ(type) AND name-3-gram Jaccard ≥ 0.5, with the τ±band low-confidence
+slice routed to the review queue and second-stage arbitration
+(`arbitrate_review`).
 
 Incremental-mode invariants (documented semantics, pinned in tests):
   * one winner per delta entity — deterministic argmax (deterministic
@@ -48,16 +55,14 @@ from __future__ import annotations
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-from pyspark.sql.types import StringType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from hinbox_spark.config import DomainConfig
 from hinbox_spark.functions.names import ACRONYM_STOPWORDS, normalize_for_match
-from hinbox_spark.operators.dedup import capped_bucket_entries
 from hinbox_spark.operators.linking import (
-    NAME_JACCARD_MIN, NAME_LSH_BUCKET_CAP, TOKEN_DF_CAP,
-    acronym_long_key, acronym_short_key, arbitrate_review,
-    containment_verified, cosine_udf, low_quality_pair,
-    name_jaccard_3gram, name_lsh_band_entries, tau_expr_for,
+    NAME_LSH_BUCKET_CAP, REASONS, TOKEN_DF_CAP, acronym_long, acronym_short,
+    arbitrate_review, blocking_keys, containment_verified, match_scores,
+    name_lsh_band_entries,
 )
 from hinbox_spark.session import local_frame
 
@@ -69,6 +74,24 @@ _REASON_RANK = {
     "containment": 3,
     "name_lsh": 4,
 }
+# candidate reason of each blocking family
+_FAMILY_REASON = {
+    "exact": "exact_key",
+    "equivalence": "equivalence",
+    "acronym": "acronym",
+    "containment": "containment",
+    "lsh": "name_lsh",
+}
+
+
+@F.pandas_udf(StructType([
+    StructField("acr_long", StringType()),
+    StructField("acr_short", StringType()),
+]))
+def _acronym_keys(s: pd.Series) -> pd.DataFrame:
+    return pd.DataFrame({
+        "acr_long": s.map(acronym_long), "acr_short": s.map(acronym_short),
+    })
 
 
 def name_index_rows(entities: DataFrame) -> DataFrame:
@@ -83,25 +106,27 @@ def name_index_rows(entities: DataFrame) -> DataFrame:
     acronym / signature pass over all store entities."""
     return (
         _name_rows(entities)
-        .withColumn("acr_long", acronym_long_key(F.col("name")))
-        .withColumn("acr_short", acronym_short_key(F.col("name")))
+        .withColumn("_a", _acronym_keys(F.col("name")))
+        .select("*", "_a.acr_long", "_a.acr_short")
+        .drop("_a")
     )
 
 
-def name_band_rows(names: DataFrame) -> DataFrame:
+def name_band_rows(names: DataFrame, cfg: DomainConfig) -> DataFrame:
     """MinHash band entries over name-index rows — the persistable half of
-    the B5 signature work. node_id packs (entity_id, match_key) so the
-    bucket join can recover both."""
+    the B5 signature work, from the batch key pass. node_id packs
+    (entity_id, match_key) so the bucket join can recover both."""
     nodes = names.select(
         "entity_type",
         F.concat_ws("\x1f", "entity_id", "match_key").alias("node_id"),
+        "name",
         "match_key",
     )
-    return name_lsh_band_entries(nodes)
+    return name_lsh_band_entries(blocking_keys(nodes, cfg, ("lsh",)))
 
 
 def _name_rows(entities: DataFrame) -> DataFrame:
-    """(entity_id, entity_type, name, match_key) — one row per distinct
+    """(entity_id, entity_type, match_key, name) — one row per distinct
     linkable surface form (canonical name + aliases) of each entity."""
 
     @F.pandas_udf(StringType())
@@ -132,197 +157,166 @@ def _name_rows(entities: DataFrame) -> DataFrame:
     )
 
 
-def _cross(
-    d: DataFrame, s: DataFrame, on: list[str], reason: str
-) -> DataFrame:
-    """Join delta-side rows × store-side rows on blocking keys → candidate
-    (delta_id, store_id, name_d, name_s, reason)."""
-    dd = d.select(
-        *on,
-        F.col("entity_id").alias("delta_id"),
-        F.col("name").alias("name_d"),
+def _delta_keys(d_names: DataFrame, cfg: DomainConfig) -> DataFrame:
+    """Delta-side blocking keys: the batch key pass over the delta's name
+    rows (node_id = entity_id; bigram re-keying is batch-only), plus the
+    exact-key rows."""
+    keys = blocking_keys(
+        d_names.select(
+            "entity_type", F.col("entity_id").alias("node_id"), "name", "match_key"
+        ),
+        cfg,
+        REASONS,
     )
-    ss = s.select(
-        *on,
-        F.col("entity_id").alias("store_id"),
+    return keys.unionByName(_key_rows(d_names, "exact", F.col("match_key")))
+
+
+def _key_rows(names: DataFrame, family: str, key, role: str = "") -> DataFrame:
+    return names.select(
+        "entity_type",
+        F.lit(family).alias("family"),
+        key.alias("key"),
+        F.lit(role).alias("role"),
+        F.col("entity_id").alias("node_id"),
+        "name",
+    )
+
+
+def _store_keys(
+    s_names: DataFrame, s_bands: DataFrame, cfg: DomainConfig
+) -> DataFrame:
+    """Store-side blocking keys, rebuilt in the JVM from the name index
+    (`name_index_rows` shape) and its band entries (`name_band_rows`
+    shape) — the same keys the batch key pass emits, plus exact keys."""
+    spark = s_names.sparkSession
+    non_people = s_names.filter(F.col("entity_type") != "people")
+    parts = [
+        _key_rows(s_names, "exact", F.col("match_key")),
+        _key_rows(non_people.filter(F.col("acr_long") != ""), "acronym",
+                  F.col("acr_long"), "long"),
+        _key_rows(non_people.filter(F.col("acr_short") != ""), "acronym",
+                  F.col("acr_short"), "short"),
+        _key_rows(
+            non_people.withColumn(
+                "token", F.explode(F.split(F.col("match_key"), " "))
+            ).filter(
+                (F.length("token") >= 4) & ~F.col("token").isin(*ACRONYM_STOPWORDS)
+            ),
+            "containment", F.col("token"), "token",
+        ),
+    ]
+    groups = [
+        (etype, normalize_for_match(member), f"{etype}:{gid}")
+        for etype, group_list in cfg.equivalence_groups.items()
+        for gid, group in enumerate(group_list)
+        for member in group
+    ]
+    if groups:
+        groups_df = local_frame(
+            spark, groups, "entity_type string, match_key string, group_id string"
+        )
+        parts.append(_key_rows(
+            s_names.join(F.broadcast(groups_df), ["entity_type", "match_key"]),
+            "equivalence", F.col("group_id"),
+        ))
+    node = F.split(F.col("node_id"), "\x1f")
+    bands = s_bands.select(
+        "entity_type",
+        node[0].alias("entity_id"),
+        node[1].alias("match_key"),
+        F.concat_ws(":", "band", "bh").alias("key"),
+    ).join(s_names.select("entity_id", "match_key", "name"),
+           ["entity_id", "match_key"])
+    parts.append(_key_rows(bands, "lsh", F.col("key")))
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
+
+
+def _proposals(d_keys: DataFrame, s_keys: DataFrame) -> DataFrame:
+    """(delta_id, store_id, name_d, name_s, family) — every key shared
+    across sides after the caps, from one join on (entity_type, family,
+    key), checkpointed for the family slices: exact keys over
+    NAME_LSH_BUCKET_CAP store entities, containment tokens over
+    TOKEN_DF_CAP store entities and MinHash buckets over
+    NAME_LSH_BUCKET_CAP entries on either side are dropped (counted by a
+    map-side-combinable groupBy, `dedup.over_cap_keys`, and broadcast back
+    as a left_anti join — no window). Acronym keys pair a long form with a
+    short form, never two long forms ('National Security Agency' /
+    'National Shipping Association' are not acronym matches)."""
+    from hinbox_spark.operators.dedup import over_cap_keys
+
+    family, key = F.col("family"), ["entity_type", "family", "key"]
+    sides = (
+        d_keys.withColumn("side", F.lit("d"))
+        .unionByName(s_keys.withColumn("side", F.lit("s")))
+        .localCheckpoint(eager=False)  # counted, then joined
+    )
+    store = F.col("side") == "s"
+    tokens = family == "containment"
+    hot = over_cap_keys(
+        sides.filter(
+            (family == "lsh") | (store & family.isin("exact", "containment"))
+        ),
+        ["side", *key],
+        F.when(tokens, TOKEN_DF_CAP).otherwise(NAME_LSH_BUCKET_CAP),
+        # a token's document frequency counts entities, not name rows
+        F.when(tokens, F.countDistinct("node_id")).otherwise(F.count("*")),
+    )
+    kept = sides.join(
+        F.broadcast(hot.select("side", *key)), ["side", *key], "left_anti"
+    )
+    d = kept.filter(~store).select(
+        *key, "role", F.col("node_id").alias("delta_id"), F.col("name").alias("name_d")
+    )
+    s = kept.filter(store).select(
+        *key,
+        F.when(F.col("role") == "short", F.lit("long"))
+        .when(F.col("role") == "long", F.lit("short"))
+        .otherwise(F.col("role")).alias("role"),
+        F.col("node_id").alias("store_id"),
         F.col("name").alias("name_s"),
     )
-    return dd.join(ss, on).select(
-        "delta_id", "store_id", "name_d", "name_s", F.lit(reason).alias("reason")
-    )
-
-
-def _family_exact(d_names: DataFrame, s_names: DataFrame) -> DataFrame:
-    """Normalized-key equality. The store side is deduped per entity by
-    construction; a key shared by >cap distinct STORE entities is a
-    degenerate store state (mass duplicates) — capped with the same
-    broadcast anti-join as every other bucket cap, never a window."""
-    s_capped = capped_bucket_entries(
-        s_names, ["entity_type", "match_key"], NAME_LSH_BUCKET_CAP, reuse=False
-    )
-    return _cross(d_names, s_capped, ["entity_type", "match_key"], "exact_key")
-
-
-def _family_equivalence(
-    d_names: DataFrame, s_names: DataFrame, cfg: DomainConfig
-) -> DataFrame:
-    spark = d_names.sparkSession
-    rows = []
-    for etype, groups in cfg.equivalence_groups.items():
-        for gid, group in enumerate(groups):
-            for member in group:
-                rows.append((etype, normalize_for_match(member), f"{etype}:{gid}"))
-    if not rows:
-        return local_frame(
-            spark,
-            [],
-            "delta_id string, store_id string, name_d string, name_s string,"
-            " reason string",
-        )
-    groups_df = F.broadcast(
-        local_frame(
-            spark, rows, "entity_type string, match_key string, group_id string"
-        )
-    )
-    d_tag = d_names.join(groups_df, ["entity_type", "match_key"]).select(
-        "entity_type", "group_id", "entity_id", "name"
-    )
-    s_tag = s_names.join(groups_df, ["entity_type", "match_key"]).select(
-        "entity_type", "group_id", "entity_id", "name"
-    )
-    return _cross(d_tag, s_tag, ["entity_type", "group_id"], "equivalence")
-
-
-def _family_acronym(d_names: DataFrame, s_names: DataFrame) -> DataFrame:
-    """Long form on one side ⇄ short form on the OTHER (B3 mirror; people
-    never acronym-match). Long×long must never pair: two different
-    entities whose names derive the same acronym ('National Security
-    Agency' / 'National Shipping Association') are not acronym matches —
-    the batch `_pairs_acronym` only ever joins longs to shorts, and so
-    does this. Key derivation is the SHARED linking.py UDF pair; index
-    rows that already carry acr_long/acr_short (the persisted store
-    index) skip the UDF."""
-
-    def _keyed(names: DataFrame, col: str, udf) -> DataFrame:
-        keyed = (
-            names.withColumn("acr_key", F.col(col))
-            if col in names.columns
-            else names.withColumn("acr_key", udf(F.col("name")))
-        )
-        return (
-            keyed.filter(F.col("entity_type") != "people")
-            .filter(F.col("acr_key") != "")
-            .select("entity_type", "acr_key", "entity_id", "name")
-        )
-
-    def _longs(names: DataFrame) -> DataFrame:
-        return _keyed(names, "acr_long", acronym_long_key)
-
-    def _shorts(names: DataFrame) -> DataFrame:
-        return _keyed(names, "acr_short", acronym_short_key)
-
+    # one row per (name pair, family): a pair sharing several tokens or
+    # bands is one candidate
     return (
-        _cross(_longs(d_names), _shorts(s_names),
-               ["entity_type", "acr_key"], "acronym")
-        .unionByName(
-            _cross(_shorts(d_names), _longs(s_names),
-                   ["entity_type", "acr_key"], "acronym")
-        )
-        .dropDuplicates(["delta_id", "store_id", "name_d", "name_s"])
+        d.join(s, [*key, "role"])
+        .select("delta_id", "store_id", "name_d", "name_s", "family")
+        .dropDuplicates()
+        .localCheckpoint(eager=False)
     )
 
 
-def _family_containment(d_names: DataFrame, s_names: DataFrame) -> DataFrame:
-    """Shared-significant-token blocking across sides + word-boundary
-    containment verify (B4 mirror). The df-cap is computed on the STORE
-    side — that is the side whose hot tokens ("national", "department")
-    would fan one delta name into millions of store candidates."""
-
-    def _tokens(names: DataFrame) -> DataFrame:
-        return names.filter(F.col("entity_type") != "people").select(
-            "entity_type",
-            "entity_id",
-            "name",
-            F.explode(F.split(F.col("match_key"), " ")).alias("token"),
-        ).filter(
-            (F.length("token") >= 4) & ~F.col("token").isin(*ACRONYM_STOPWORDS)
-        )
-
-    d_tok, s_tok = _tokens(d_names), _tokens(s_names)
-    hot = (
-        s_tok.groupBy("entity_type", "token")
-        .agg(F.countDistinct("entity_id").alias("df"))
-        .filter(F.col("df") > TOKEN_DF_CAP)
-        .select("entity_type", "token")
+def _family(proposals: DataFrame, family: str) -> DataFrame:
+    """One family's candidates (delta_id, store_id, name_d, name_s,
+    reason)."""
+    return proposals.filter(F.col("family") == family).select(
+        "delta_id", "store_id", "name_d", "name_s",
+        F.lit(_FAMILY_REASON[family]).alias("reason"),
     )
-    cand = _cross(
-        d_tok.join(F.broadcast(hot), ["entity_type", "token"], "left_anti"),
-        s_tok.join(F.broadcast(hot), ["entity_type", "token"], "left_anti"),
-        ["entity_type", "token"],
-        "containment",
-    ).dropDuplicates(["delta_id", "store_id", "name_d", "name_s"])
-
-    return cand.filter(containment_verified(F.col("name_d"), F.col("name_s")))
 
 
-def _family_lsh(
-    d_names: DataFrame,
-    s_names: DataFrame,
-    cfg: DomainConfig,
-    s_bands: DataFrame | None = None,
-) -> DataFrame:
-    """MinHash name-LSH across sides (B5 mirror): band entries per side,
-    per-side bucket caps (broadcast anti-join — a boilerplate store name
-    never funnels a bucket into one task), equi-join on (type, band, bh).
-    Pass `s_bands` (the persisted `name_band_rows` store index) to skip
-    the store-side signature pass entirely."""
+def _family_exact(proposals: DataFrame) -> DataFrame:
+    return _family(proposals, "exact")
 
-    def _capped(ent: DataFrame) -> DataFrame:
-        return capped_bucket_entries(
-            ent, ["entity_type", "band", "bh"], NAME_LSH_BUCKET_CAP
-        )
 
-    d_e = _capped(name_band_rows(d_names)).select(
-        "entity_type", "band", "bh", F.col("node_id").alias("d_node")
+def _family_equivalence(proposals: DataFrame) -> DataFrame:
+    return _family(proposals, "equivalence")
+
+
+def _family_acronym(proposals: DataFrame) -> DataFrame:
+    return _family(proposals, "acronym")
+
+
+def _family_containment(proposals: DataFrame) -> DataFrame:
+    return _family(proposals, "containment").filter(
+        containment_verified(F.lit(True), F.col("name_d"), F.col("name_s"))
     )
-    s_ent = s_bands if s_bands is not None else name_band_rows(s_names)
-    s_e = _capped(s_ent).select(
-        "entity_type", "band", "bh", F.col("node_id").alias("s_node")
-    )
-    pairs = (
-        d_e.join(s_e, ["entity_type", "band", "bh"])
-        .select(
-            F.split_part(F.col("d_node"), F.lit("\x1f"), F.lit(1)).alias("delta_id"),
-            F.split_part(F.col("d_node"), F.lit("\x1f"), F.lit(2)).alias("mk_d"),
-            F.split_part(F.col("s_node"), F.lit("\x1f"), F.lit(1)).alias("store_id"),
-            F.split_part(F.col("s_node"), F.lit("\x1f"), F.lit(2)).alias("mk_s"),
-        )
-        .dropDuplicates(["delta_id", "store_id", "mk_d", "mk_s"])
-    )
-    # re-attach display names (tiny dimension joins on the name rows)
-    pairs = (
-        pairs.join(
-            d_names.select(
-                F.col("entity_id").alias("delta_id"),
-                F.col("match_key").alias("mk_d"),
-                F.col("name").alias("name_d"),
-            ),
-            ["delta_id", "mk_d"],
-        )
-        .join(
-            s_names.select(
-                F.col("entity_id").alias("store_id"),
-                F.col("match_key").alias("mk_s"),
-                F.col("name").alias("name_s"),
-            ),
-            ["store_id", "mk_s"],
-        )
-        .select(
-            "delta_id", "store_id", "name_d", "name_s",
-            F.lit("name_lsh").alias("reason"),
-        )
-    )
-    return pairs
+
+
+def _family_lsh(proposals: DataFrame) -> DataFrame:
+    return _family(proposals, "lsh")
 
 
 def link_entities_to_store(
@@ -350,21 +344,26 @@ def link_entities_to_store(
     normalize UDF or MinHash signature pass touches the store; without
     them both are derived from `store` (correct, but O(|store|) Python
     work per run — fine for tests, wrong for a nightly delta at scale).
+    The delta side runs the batch key pass over its name rows.
     """
     from hinbox_spark.functions.skew import bounded_topk
 
     d_names = _name_rows(delta).localCheckpoint(eager=False)
     s_names = (
-        store_names if store_names is not None else _name_rows(store)
+        store_names if store_names is not None else name_index_rows(store)
     ).localCheckpoint(eager=False)
+    s_bands = store_bands if store_bands is not None else name_band_rows(s_names, cfg)
+    proposals = _proposals(
+        _delta_keys(d_names, cfg), _store_keys(s_names, s_bands, cfg)
+    )
 
     det = (
-        _family_exact(d_names, s_names)
-        .unionByName(_family_equivalence(d_names, s_names, cfg))
-        .unionByName(_family_acronym(d_names, s_names))
-        .unionByName(_family_containment(d_names, s_names))
+        _family_exact(proposals)
+        .unionByName(_family_equivalence(proposals))
+        .unionByName(_family_acronym(proposals))
+        .unionByName(_family_containment(proposals))
     )
-    lsh = _family_lsh(d_names, s_names, cfg, s_bands=store_bands).join(
+    lsh = _family_lsh(proposals).join(
         det.select("delta_id", "store_id"), ["delta_id", "store_id"], "left_anti"
     )
     # reference blocking_max_candidates: cap cosine-path proposals per delta
@@ -405,60 +404,27 @@ def link_entities_to_store(
         )
     )
 
-    # ── scoring (J6-J9 semantics over store metadata) ──
+    # ── scoring: the batch match check over store metadata ──
     d_meta = delta.select(
         F.col("entity_id").alias("delta_id"),
         "entity_type",
-        F.col("canonical_name").alias("canon_d"),
         F.col("canonical_start_date").alias("date_d"),
         F.col("search_embedding").alias("vec_d"),
     )
     s_meta = store.select(
         F.col("entity_id").alias("store_id"),
-        F.col("canonical_name").alias("canon_s"),
         F.col("canonical_start_date").alias("date_s"),
         F.col("search_embedding").alias("vec_s"),
     )
-    enriched = cand.join(d_meta, "delta_id").join(s_meta, "store_id")
-
-    # shared linking.py UDFs — identical match semantics batch vs store
-    scored = (
-        enriched.withColumn("sim", cosine_udf(F.col("vec_d"), F.col("vec_s")))
-        .withColumn("tau", tau_expr_for(cfg))
-        .withColumn(
-            "guard_lq", low_quality_pair(F.col("name_d"), F.col("name_s"))
-        )
-        .withColumn(
-            "name_jac", name_jaccard_3gram(F.col("name_d"), F.col("name_s"))
-        )
-        .localCheckpoint(eager=False)
+    scored = match_scores(
+        cand.join(d_meta, "delta_id").join(s_meta, "store_id"),
+        cfg,
+        F.col("reason_rank") < _REASON_RANK["name_lsh"],
+        "d",
+        "s",
     )
-
-    deterministic = F.col("reason_rank") < _REASON_RANK["name_lsh"]
-    in_gray = F.abs(F.col("sim") - F.col("tau")) <= cfg.gray_band_width
-    names_close = F.col("name_jac") >= NAME_JACCARD_MIN
-    confident = F.col("name_jac") >= F.lit(cfg.gray_band_confidence_cutoff)
-    # events hard rule: dated events only merge when dates agree
-    dates_ok = (
-        (F.col("entity_type") != "events")
-        | (F.col("date_d") == F.col("date_s"))
-        | (F.col("date_d") == "")
-        | (F.col("date_s") == "")
-    )
-
-    accepted = scored.filter(
-        ~F.col("guard_lq")
-        & dates_ok
-        & (
-            deterministic
-            | (names_close & (F.col("sim") >= F.col("tau")) & (~in_gray | confident))
-        )
-    )
-
-    review = scored.filter(
-        ~deterministic & in_gray & ~confident & names_close & dates_ok
-        & ~F.col("guard_lq")
-    ).select(
+    accepted = scored.filter("accept")
+    review = scored.filter("defer").select(
         F.col("delta_id").alias("src"),
         F.col("store_id").alias("dst"),
         "entity_type",
@@ -468,10 +434,11 @@ def link_entities_to_store(
         "tau",
         F.col("name_jac").alias("confidence"),
         F.lit("defer").alias("decision"),
+        "tok_jac", "acr", "cont",
     )
     # second-stage arbitration (same pass as the batch pipeline): merges
     # join the accepted set, skips are final, defers stay queued
-    review = arbitrate_review(review).localCheckpoint()
+    review = arbitrate_review(review)
     arb_merges = review.filter(F.col("decision") == "merge").select(
         F.col("src").alias("delta_id"),
         F.col("dst").alias("store_id"),

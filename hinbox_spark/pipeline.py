@@ -42,9 +42,10 @@ from hinbox_spark.operators.extraction import (
     relevance_predicate, scrub_articles, skip_reason_summary,
 )
 from hinbox_spark.operators.linking import (
-    arbitrate_review, candidate_pairs, mention_nodes, name_lsh_band_entries,
-    name_lsh_truncation_stats, name_lsh_truncation_stats_from_entries,
-    node_evidence_embeddings, score_pairs,
+    arbitrate_review, blocking_keys, candidate_pairs, mention_nodes,
+    name_lsh_band_entries, name_lsh_truncation_stats,
+    name_lsh_truncation_stats_from_entries, node_evidence_embeddings,
+    score_pairs,
 )
 from hinbox_spark.operators.profiles import build_profiles, ground_profiles
 from hinbox_spark.session import local_frame
@@ -294,25 +295,24 @@ def resolve(
     module's namespace at call time, so a patch on `pipeline` reaches both
     entry points."""
     nodes = mention_nodes(mentions).cache()
-    # the B5 MinHash signature pass (the one pandas-UDF job of the
-    # blocking family) is computed ONCE and shared: pairing reads it, and
-    # the batch metrics stage derives its truncation counters from the
-    # same checkpointed entries instead of re-running the pass
-    band_entries = name_lsh_band_entries(nodes).localCheckpoint(eager=False)
-    # pairs is checkpointed so the review/score materialization and the
-    # decisions anti-joins share one blocking-family computation
-    pairs = candidate_pairs(
-        nodes, cfg, band_entries=band_entries
-    ).localCheckpoint(eager=False)
+    # the blocking-key pass (the one Python pass of blocking) is computed
+    # ONCE and shared: pairing reads it, and the batch metrics stage
+    # derives its truncation counters from the same checkpointed keys
+    keys = blocking_keys(nodes, cfg).localCheckpoint(eager=False)
+    band_entries = name_lsh_band_entries(keys)
+    # pairs is checkpointed so the scoring pass and the decisions
+    # anti-joins share one blocking computation
+    pairs = candidate_pairs(nodes, cfg, keys=keys).localCheckpoint(eager=False)
     node_vecs = node_evidence_embeddings(nodes, mentions, articles, cfg)
+    # one eager checkpoint of the scored pairs underlies accepted and
+    # review: the review write, the queue append and the decisions
+    # aggregates all read its materialized blocks
     accepted, review = score_pairs(pairs, nodes, node_vecs, cfg)
     # second-stage dispute arbitration (merge_dispute_agent parity): a
-    # deterministic richer-feature pass over the gray-band rows can
-    # override in both directions — merges feed back as clustering edges,
-    # skips are final, defers stay queued for humans. The arbitrated set is
-    # eagerly checkpointed: the review write, the queue append and the
-    # decisions aggregates all consume the same materialized blocks.
-    review = arbitrate_review(review).localCheckpoint()
+    # deterministic pass over the gray-band rows' features can override in
+    # both directions — merges feed back as clustering edges, skips are
+    # final, defers stay queued for humans
+    review = arbitrate_review(review)
     dispute_merges = review.filter(F.col("decision") == "merge").select(
         "src", "dst", "entity_type",
         F.lit("dispute_merge").alias("reason"), "sim",
@@ -571,13 +571,13 @@ def run_pipeline(
             )
             # B5 truncation: dropped name-LSH buckets are counted, not
             # silent. When the linking block ran this session the counters
-            # derive from the SAME checkpointed band entries (no signature
+            # derive from the SAME checkpointed blocking keys (no key-pass
             # recompute); only a resumed run that skipped linking but lost
             # its metrics pays the standalone fallback.
             trunc = (
                 name_lsh_truncation_stats_from_entries(band_entries)
                 if band_entries is not None
-                else name_lsh_truncation_stats(mentions)
+                else name_lsh_truncation_stats(mentions, cfg)
             )
             m = m.unionByName(
                 trunc.select(

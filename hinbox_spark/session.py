@@ -18,6 +18,13 @@ module the workers cannot import would fail every Python task.
 
 The driver heap is `SPARK_DRIVER_MEM` when set, else min(24g, half of
 physical RAM).
+
+PySpark's DataFrame debugging (`spark.python.sql.dataFrameDebugging.enabled`)
+is off: with it on, every DataFrame method call captures its Python call
+site on the driver (the first capture imports IPython), which made up most
+of the driver-side plan-building time of a small build. What is lost is the
+DataFrame query context (the user code line) in analysis error messages;
+the error itself is unchanged.
 """
 
 from __future__ import annotations
@@ -121,6 +128,8 @@ def get_spark(
         # EPoll.wait). faulthandler makes the worker dump a stack on fatal
         # signals so the death is diagnosable instead of a silent hang.
         .config("spark.python.worker.faulthandler.enabled", "true")
+        # no per-call Python call-site capture (see the module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.host", "127.0.0.1")

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 
 from hinbox_spark.config import DomainConfig
 from hinbox_spark.incremental import run_incremental
+from hinbox_spark.pipeline import overlap
 
 
 def stream_kg_ingest(
@@ -39,13 +40,16 @@ def stream_kg_ingest(
         raise ValueError("stream_kg_ingest requires cfg.snapshot_store_path")
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        run_incremental(
-            batch_df.sparkSession,
-            batch_df,
-            f"{output_root.rstrip('/')}/batch-{batch_id}",
-            cfg=cfg,
-            run_id=f"stream-{batch_id}",
-        )
+        # nothing reads the returned frames: keep none of the checkpoints
+        # the run made for them, or every epoch leaves them behind
+        with overlap(batch_df.sparkSession):
+            run_incremental(
+                batch_df.sparkSession,
+                batch_df,
+                f"{output_root.rstrip('/')}/batch-{batch_id}",
+                cfg=cfg,
+                run_id=f"stream-{batch_id}",
+            )
 
     return (
         pages_stream.writeStream.foreachBatch(_apply)

@@ -14,6 +14,36 @@ def spark():
     s.stop()
 
 
+@pytest.fixture(autouse=True)
+def _session_settings_kept(request):
+    """The suite shares one session: a test that leaves a setting the
+    session was created with changed (e.g. spark.sql.shuffle.partitions)
+    hands it to every later test. Fail that test. `spark.conf.unset`
+    restores Spark's default, not the session's value — put back the
+    value read before the change."""
+    if "spark" not in request.fixturenames:
+        yield
+        return
+    spark = request.getfixturevalue("spark")
+    # the app name is a label: get_spark(app_name) on the running session
+    # (the CLI does) relabels it without changing how anything runs
+    keys = [
+        k for k, _ in spark.sparkContext.getConf().getAll() if k != "spark.app.name"
+    ]
+
+    def settings() -> dict:
+        return {k: spark.conf.get(k, None) for k in keys}
+
+    before = settings()
+    yield
+    changed = {
+        k: (v, now) for (k, v), now in zip(before.items(), settings().values())
+        if now != v
+    }
+    if changed:
+        pytest.fail(f"session settings left changed (before, after): {changed}")
+
+
 def persistent_rdds(spark) -> set:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 

@@ -213,8 +213,11 @@ class TestNameLshBucketCap:
         """10k near-identical names (boilerplate titles) must not go
         quadratic in one LSH bucket: the band-bucket cap bounds the pair
         count and the truncation is counted, not silent."""
+        import dataclasses
+
         from hinbox_spark.operators.linking import (
-            NAME_LSH_BUCKET_CAP, _pairs_minhash_names,
+            NAME_LSH_BUCKET_CAP, blocking_keys, name_lsh_band_entries,
+            name_lsh_truncation_stats_from_entries,
         )
 
         rows = [
@@ -228,15 +231,98 @@ class TestNameLshBucketCap:
             "description string, start_date string, end_date string, "
             "is_fuzzy_date boolean, aliases array<string>",
         )
+        cfg = get_default_config()
         nodes = mention_nodes(m)
-        stats = {}
-        pairs = _pairs_minhash_names(nodes, stats_out=stats)
-        n = pairs.count()
-        assert stats["dropped_buckets"] > 0
-        assert stats["dropped_entries"] > 0
+        keys = blocking_keys(nodes, cfg).localCheckpoint()
+        stats = {
+            r["stage"]: r["n"]
+            for r in name_lsh_truncation_stats_from_entries(
+                name_lsh_band_entries(keys)
+            ).collect()
+        }
+        # no per-node LSH cap: only the bucket cap bounds the pair count
+        uncapped = dataclasses.replace(cfg, blocking_max_candidates=10**9)
+        n = candidate_pairs(nodes, uncapped, keys=keys).count()
+        assert stats["name_lsh_dropped_buckets"] > 0
+        assert stats["name_lsh_dropped_entries"] > 0
         # bounded: the cap turns the worst case from O(n²) into O(n·cap)
         # per band — far below the ~5·10⁷ all-pairs count for 10k names
         assert n < 10_000 * NAME_LSH_BUCKET_CAP  # 2M vs 50M all-pairs
+
+
+class TestFusedBlocking:
+    """One key pass, one self-join: the reason and cap rules that used to
+    live in four separate family joins."""
+
+    def _pairs(self, spark, names, cfg):
+        nodes = _nodes(spark, [("organizations", n, "government", "")
+                               for n in names])
+        by_id = {r["node_id"]: r["name"] for r in nodes.collect()}
+        return {
+            frozenset((by_id[r["src"]], by_id[r["dst"]])): r["reason"]
+            for r in candidate_pairs(nodes, cfg).collect()
+        }
+
+    def test_pair_found_by_two_families_carries_stronger_reason(self, spark):
+        import dataclasses
+
+        cfg = dataclasses.replace(
+            get_default_config(),
+            equivalence_groups={"organizations": [
+                ["Homeland Security", "Department of Homeland Security"]]},
+        )
+        got = self._pairs(spark, [
+            "Homeland Security",                 # equivalence + containment
+            "Department of Homeland Security",
+            "Guantanamo Bay Naval Base",         # containment + name LSH
+            "Guantanamo Bay Naval Base Cuba",
+        ], cfg)
+        assert got[frozenset(("Homeland Security",
+                              "Department of Homeland Security"))] == "equivalence"
+        assert got[frozenset(("Guantanamo Bay Naval Base",
+                              "Guantanamo Bay Naval Base Cuba"))] == "containment"
+
+    def test_two_long_forms_never_acronym_pair(self, spark):
+        import dataclasses
+
+        # no equivalence groups: the default config's NSA group would win
+        cfg = dataclasses.replace(get_default_config(), equivalence_groups={})
+        got = self._pairs(spark, [
+            "National Security Agency", "National Shipping Association", "NSA",
+        ], cfg)
+        assert got[frozenset(("NSA", "National Security Agency"))] == "acronym"
+        assert got[frozenset(("NSA", "National Shipping Association"))] == "acronym"
+        assert got.get(frozenset(
+            ("National Security Agency", "National Shipping Association")
+        )) != "acronym"
+
+    def test_lsh_cap_keeps_first_pairs_in_hash_order(self, spark):
+        """Per node, the capped LSH proposals are the blocking_max_candidates
+        pairs first in xxhash64(src, dst) order among all of its LSH
+        proposals."""
+        import dataclasses
+
+        nodes = _nodes(spark, [
+            ("organizations", f"Weekly Report Bulletin {i:02d}", "government", "")
+            for i in range(20)
+        ])
+        k = 3
+        cfg = get_default_config()
+        capped = candidate_pairs(
+            nodes, dataclasses.replace(cfg, blocking_max_candidates=k)
+        )
+        every = candidate_pairs(
+            nodes, dataclasses.replace(cfg, blocking_max_candidates=10_000)
+        ).filter(F.col("reason") == "lsh")
+        order: dict = {}
+        for r in every.select("src", "dst", F.xxhash64("src", "dst").alias("h")
+                              ).collect():
+            order.setdefault(r["src"], []).append((r["h"], r["dst"]))
+        assert any(len(v) > k for v in order.values())
+        want = {(src, dst) for src, v in order.items() for _, dst in sorted(v)[:k]}
+        got = {(r["src"], r["dst"])
+               for r in capped.filter(F.col("reason") == "lsh").collect()}
+        assert got == want
 
 
 class TestGrayBandConfidenceGate:
@@ -303,8 +389,11 @@ class TestDisputeArbitration:
     tests/test_merge_dispute_agent_routing.py:299-350)."""
 
     def _review(self, spark, rows):
-        """rows: (name_src, name_dst, sim, tau)"""
-        return spark.createDataFrame(
+        """rows: (name_src, name_dst, sim, tau) → review rows carrying the
+        arbitration features, as `score_pairs` emits them."""
+        from hinbox_spark.operators.linking import pair_scores
+
+        review = spark.createDataFrame(
             [
                 (f"s{i}", f"d{i}", "organizations", a, b, sim, tau, 0.5, "defer")
                 for i, (a, b, sim, tau) in enumerate(rows)
@@ -313,6 +402,10 @@ class TestDisputeArbitration:
             "name_dst string, sim double, tau double, confidence double, "
             "decision string",
         )
+        no_vec = F.lit(None).cast("array<float>")
+        return review.withColumn(
+            "_s", pair_scores("name_src", "name_dst", no_vec, no_vec)
+        ).select("*", "_s.tok_jac", "_s.acr", "_s.cont").drop("_s")
 
     def test_override_both_directions_and_defer(self, spark):
         from hinbox_spark.operators.linking import arbitrate_review

@@ -109,3 +109,25 @@ def test_all_five_support_levels(spark):
     assert rows["n"]["grounding_passed"] is False
     assert "unsupported_claims" in rows["n"]["grounding_flags"]
     assert "missing_sources" in rows["m"]["grounding_flags"]
+
+
+def test_profile_fold_runs_once_per_cluster(spark, tmp_path, monkeypatch):
+    """The grounding report consumes the assembled profiles twice, from two
+    independent stages; the fold under them must be materialized once, so
+    `_assemble` runs exactly once per cluster."""
+    from hinbox_spark.operators import profiles as prof
+    from hinbox_spark.pipeline import run_pipeline
+    from hinbox_spark.sources.pages_gen import pages_dataframe
+
+    calls = spark.sparkContext.accumulator(0)
+    real = prof._assemble
+
+    def counted(key, pdf):
+        calls.add(1)
+        return real(key, pdf)
+
+    monkeypatch.setattr(prof, "_assemble", counted)
+    pages, _ = pages_dataframe(spark, 30, 5)
+    t = run_pipeline(spark, pages, str(tmp_path / "out"), resume=False)
+    n = t["profiles"].count()
+    assert n > 0 and calls.value == n

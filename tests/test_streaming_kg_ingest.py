@@ -84,3 +84,30 @@ def test_stream_kg_ingest_matches_batch_and_redrain_is_noop(spark, tmp_path):
         (r["entity_type"], r["canonical_name"])
         for r in _store_entities(spark, store).collect()
     }
+
+
+def test_drain_leaves_no_persistent_rdds(spark, tmp_path, delta_world):
+    """Each epoch's `run_incremental` returns frames over checkpoints that
+    foreachBatch never reads: a drain must free them, not leave them
+    behind per micro-batch."""
+    from conftest import persistent_rdds
+
+    store, cfg = delta_world["fork"]()
+    pages_b = delta_world["pages_b"]
+    urls = sorted(r.url for r in pages_b.select("url").collect())
+    src = str(tmp_path / "incoming")
+    half = len(urls) // 2
+    for part in (urls[:half], urls[half:]):  # one file per epoch
+        pages_b.filter(F.col("url").isin(part)).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+    before = persistent_rdds(spark)
+    runs = tmp_path / "runs"
+    q = stream_kg_ingest(
+        spark.readStream.schema(PAGES_SCHEMA).option("maxFilesPerTrigger", 1)
+        .parquet(src),
+        str(runs), cfg, str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination()
+    assert sorted(p.name for p in runs.iterdir()) == ["batch-0", "batch-1"]
+    assert persistent_rdds(spark) <= before
