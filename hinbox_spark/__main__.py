@@ -24,7 +24,9 @@ def main(argv: list[str] | None = None) -> int:
                    help="generate a synthetic corpus of N pages instead")
     p.add_argument("--seed", type=int, default=42)
     p.add_argument("--output", required=True, help="output/checkpoint dir")
-    p.add_argument("--master", default=None, help="spark master override")
+    p.add_argument("--master", default=None,
+                   help="spark master of a new session (a session that is "
+                        "already running is used as it is)")
     p.add_argument("--no-resume", action="store_true",
                    help="recompute every stage even if checkpointed")
     p.add_argument("--cache", default=None,
@@ -53,11 +55,16 @@ def main(argv: list[str] | None = None) -> int:
     if args.incremental and not args.store:
         p.error("--incremental requires --store")
 
+    from pyspark.sql import SparkSession
+
     from hinbox_spark.pipeline import run_pipeline
     from hinbox_spark.session import get_spark
 
-    spark = get_spark("hinbox_spark_pipeline", master=args.master)
-    spark.sparkContext.setLogLevel("WARN")
+    # a session that is already running (the caller's) keeps its settings
+    spark = SparkSession.getActiveSession()
+    if spark is None:
+        spark = get_spark("hinbox_spark_pipeline", master=args.master)
+        spark.sparkContext.setLogLevel("WARN")
 
     if args.pages:
         pages = spark.read.parquet(args.pages)

@@ -11,11 +11,13 @@ components → canonicalize), then the resulting delta entities are linked
 against the store with the bipartite families in `operators/store_link.py`,
 and the store tables are updated with atomic snapshot commits:
 
-  entities         merge-on-read upsert by entity_id — matched entities
-                   absorb the delta's aliases/articles/counters, new
-                   entities append; store identity is sticky (canonical
-                   name and entity_id never flip — a stronger delta name
-                   becomes an alias, published ids stay stable)
+  entities         merge-on-read upsert by entity_id. Each upserted row is
+                   the batch build's entity fold (`operators/canonicalize`)
+                   over the store row, as a partial, and this run's mentions
+                   of that entity; a new entity folds its mentions alone.
+                   Store identity is sticky: a matched entity keeps its
+                   cluster_id, canonical (name, type, start_date) and so its
+                   entity_id — a stronger delta name becomes an alias
   edges            append (triples are content-addressed; consumers
                    read_resolved(["subj","pred","obj"]) for the set view)
   review_queue     append-only cross-run dispute queue with run attribution
@@ -42,10 +44,11 @@ it exactly once (single-writer model, like the reference).
 
 The batch pipeline (`run_pipeline`) with `snapshot_store_path` set is the
 bootstrap: it seeds the same store tables, after which any number of
-incremental runs apply deltas. Equivalence with a from-scratch batch run
-over the union corpus (same entity set, aliases, counters, profiles) is
-pinned in tests/test_incremental_store.py for deltas whose store matches
-are decided deterministically; the documented divergences are the
+incremental runs apply deltas. Because both runs fold entities with the
+same code, a store that bootstrap + deltas built equals a from-scratch batch
+run over the union corpus (same entity set, aliases, counters, profiles)
+wherever the store matches are decided deterministically — pinned in
+tests/test_incremental_store.py. The documented divergences are the
 incremental-mode invariants themselves (sticky canonical names, store-store
 merges deferred to the review queue as "bridge" disputes).
 """
@@ -62,7 +65,8 @@ from hinbox_spark import fs as hfs
 from hinbox_spark import pipeline as pl
 from hinbox_spark.config import DomainConfig, get_default_config
 from hinbox_spark.operators.canonicalize import (
-    ENTITY_ARTICLES_CAP, build_edge_triples,
+    build_edge_triples, build_entities, canonical_names, entity_facets, fold,
+    identity_facets, mention_facets,
 )
 from hinbox_spark.operators.profiles import (
     PROFILE_ARTICLES_CAP, assemble_profiles, ground_profiles,
@@ -71,9 +75,7 @@ from hinbox_spark.operators.profiles import (
 from hinbox_spark.operators.store_link import (
     link_entities_to_store, name_band_rows, name_index_rows,
 )
-from hinbox_spark.pipeline import (
-    _table_path, _with_profile_embedding, _with_search_embedding, _write,
-)
+from hinbox_spark.pipeline import _table_path, _with_profile_embedding, _write
 from hinbox_spark.session import local_frame
 from hinbox_spark.tables import SnapshotTable
 
@@ -288,6 +290,37 @@ def maintain_store(
     return touched
 
 
+def entity_upserts(
+    clusters: DataFrame,
+    ent_map: DataFrame,
+    store_rows: DataFrame | None,
+    cfg: DomainConfig,
+) -> DataFrame:
+    """The entity rows a delta run upserts: per final entity, the batch
+    build's fold (`operators/canonicalize`) over its store row, when it has
+    one, and this run's mentions of it.
+
+    ``clusters`` are the delta's mention rows; ``ent_map`` maps each delta
+    cluster_id to the entity_id it lands in and that entity's identity
+    (entity_type, entity_cluster_id, canonical_name/type/start_date), which
+    the fold keeps; ``store_rows`` are the matched store entities. The
+    delta's articles count is the exact distinct-url count of its mention
+    rows — the url set of its fact rows — so two delta clusters that land
+    in one entity never count a shared url twice. It adds to the store's
+    count because the processed-pages log keeps the url sets of different
+    runs disjoint (a changed-content url reprocess is the documented +1
+    approximation)."""
+    facets = mention_facets(
+        clusters.join(ent_map.select("cluster_id", "entity_id"), "cluster_id"),
+        key="entity_id",
+    ).unionByName(
+        identity_facets(ent_map, "entity_id", "entity_cluster_id")
+    )
+    if store_rows is not None:
+        facets = facets.unionByName(entity_facets(store_rows))
+    return build_entities(canonical_names(fold(facets)), cfg)
+
+
 def run_incremental(
     spark: SparkSession,
     pages: DataFrame,
@@ -391,36 +424,41 @@ def run_incremental(
             )
             review2 = local_frame(spark, [], review1.schema)
 
-        # ── FINAL identity map + per-run profile facts ──
-        # (built before the upserts: the delta's fact rows give the EXACT
-        # distinct-url contribution per final entity, so merged n_articles
-        # never double-counts a url shared by two delta clusters that landed
-        # in the same store entity)
+        # ── FINAL identity map: delta cluster → the entity it lands in and
+        # that entity's identity. A matched cluster takes the store entity's
+        # (sticky: its cluster_id and canonical triple, hence its entity_id);
+        # any other keeps its own ──
+        identity = {  # ent_map column → entity column
+            "entity_id": "entity_id", "entity_cluster_id": "cluster_id",
+            "canonical_name": "canonical_name", "canonical_type": "canonical_type",
+            "canonical_start_date": "canonical_start_date",
+        }
         ent_map = delta_entities.select(
-            "cluster_id", "entity_id", "canonical_name", "canonical_type"
+            "cluster_id", "entity_type",
+            *[F.col(src).alias(dst) for dst, src in identity.items()],
         )
         if store_entities is not None:
-            sm = store_entities.select(
-                F.col("entity_id").alias("store_id"),
-                F.col("canonical_name").alias("_s_canon"),
-                F.col("canonical_type").alias("_s_ctype"),
-            )
             ent_map = (
                 ent_map.join(
                     assignments.select(
-                        F.col("delta_id").alias("entity_id"), "store_id"
+                        F.col("delta_id").alias("entity_id"),
+                        F.col("store_id").alias("s_entity_id"),
                     ),
-                    "entity_id",
-                    "left",
+                    "entity_id", "left",
                 )
-                .join(sm, "store_id", "left")
+                .join(
+                    store_entities.select(
+                        *[F.col(src).alias("s_" + dst) for dst, src in identity.items()]
+                    ),
+                    "s_entity_id", "left",
+                )
                 .select(
-                    "cluster_id",
-                    F.coalesce("store_id", "entity_id").alias("entity_id"),
-                    F.coalesce("_s_canon", "canonical_name").alias("canonical_name"),
-                    F.coalesce("_s_ctype", "canonical_type").alias("canonical_type"),
+                    "cluster_id", "entity_type",
+                    *[F.coalesce("s_" + c, c).alias(c) for c in identity],
                 )
             )
+        # eager: the fact rows, the edges and the upserts all join it
+        ent_map = ent_map.localCheckpoint()
         # eager: three concurrent consumers below (facts append, cited build,
         # profile rebuild) must share materialized blocks, not race a lazy
         # checkpoint. Re-reduced per (entity_id, url) AFTER the remap: two
@@ -441,205 +479,11 @@ def run_incremental(
             .localCheckpoint()
         )
 
-        # ── build the entity upserts ──
-        if store_entities is None:
-            upserts = delta_entities
-        else:
-            a_keyed = assignments.select(
-                F.col("delta_id").alias("entity_id"), "store_id"
-            )
-            matched = delta_entities.join(a_keyed, "entity_id")
-            unmatched = delta_entities.join(a_keyed.select("entity_id"),
-                                            "entity_id", "left_anti")
-
-            # distinct-first contributions per store entity (mega-merge safe:
-            # explode → distinct has map-side combine; no collect_list ever
-            # sees duplicate-heavy input). The article contribution is the
-            # EXACT per-final-entity distinct-url count from this run's fact
-            # rows — O(delta), never a store scan; additive with the store
-            # count because the processed-pages log keeps run url sets
-            # disjoint (a changed-content url reprocess is the documented
-            # +1 approximation).
-            scalars = matched.groupBy("store_id").agg(
-                F.sum("n_mentions").alias("d_mentions"),
-                F.min("extraction_timestamp").alias("d_ts"),
-            ).join(
-                facts.groupBy(F.col("entity_id").alias("store_id")).agg(
-                    F.countDistinct("url").alias("d_articles")
-                ),
-                "store_id",
-            )
-            d_alias = (
-                matched.select("store_id", F.explode_outer("aliases").alias("v"))
-                .filter(F.col("v").isNotNull()).distinct()
-                .groupBy("store_id").agg(F.collect_list("v").alias("d_aliases"))
-            )
-            d_names = (
-                matched.select("store_id", F.explode_outer("all_names").alias("v"))
-                .filter(F.col("v").isNotNull()).distinct()
-                .groupBy("store_id").agg(F.collect_list("v").alias("d_all_names"))
-            )
-            d_entries = (
-                matched.select("store_id", F.explode_outer("alt_entries").alias("e"))
-                .filter(F.col("e").isNotNull())
-                .unionByName(
-                    matched.select(
-                        "store_id",
-                        F.struct(
-                            F.col("canonical_name").alias("name"),
-                            F.col("canonical_type").alias("type"),
-                            F.col("canonical_start_date").alias("start_date"),
-                        ).alias("e"),
-                    )
-                )
-                .distinct()
-                .groupBy("store_id").agg(F.collect_list("e").alias("d_entries"))
-            )
-            contrib = (
-                scalars.join(d_alias, "store_id", "left")
-                .join(d_names, "store_id", "left")
-                .join(d_entries, "store_id", "left")
-            )
-
-            s = store_entities.join(
-                contrib.withColumnRenamed("store_id", "entity_id"), "entity_id"
-            )
-            empty_arr = F.array().cast("array<string>")
-            d_aliases = F.coalesce("d_aliases", empty_arr)
-            d_all_names = F.coalesce("d_all_names", empty_arr)
-            d_ent = F.coalesce(
-                "d_entries",
-                F.array().cast(
-                    "array<struct<name:string,type:string,start_date:string>>"
-                ),
-            )
-            # aliases: store ∪ delta ∪ (delta names − store canonical) — the
-            # delta's canonical name becomes an alias of the sticky store name
-            merged = (
-                s.withColumn(
-                    "aliases",
-                    F.array_sort(F.array_distinct(F.concat(
-                        "aliases", d_aliases,
-                        F.array_except(d_all_names, F.array("canonical_name")),
-                    ))),
-                )
-                .withColumn(
-                    "all_names",
-                    F.array_sort(F.array_distinct(F.concat("all_names", d_all_names))),
-                )
-                .withColumn(
-                    "alt_entries",
-                    F.array_sort(F.array_distinct(F.concat(
-                        "alt_entries",
-                        F.filter(
-                            d_ent,
-                            lambda e: ~(
-                                (e["name"] == F.col("canonical_name"))
-                                & (e["type"] == F.col("canonical_type"))
-                                & (e["start_date"] == F.col("canonical_start_date"))
-                            ),
-                        ),
-                    ))),
-                )
-                .withColumn("n_mentions", F.col("n_mentions") + F.col("d_mentions"))
-                .withColumn("n_articles", F.col("n_articles") + F.col("d_articles"))
-                .withColumn(
-                    "extraction_timestamp",
-                    F.least("extraction_timestamp", "d_ts"),
-                )
-            )
-            # derived alt projections + reference-masked alternative_names —
-            # same construction as build_entities
-            merged = (
-                merged.withColumn(
-                    "alt_names",
-                    F.array_sort(F.array_distinct(
-                        F.transform("alt_entries", lambda e: e["name"])
-                    )),
-                )
-                .withColumn(
-                    "alt_types",
-                    F.array_sort(F.array_distinct(
-                        F.transform("alt_entries", lambda e: e["type"])
-                    )),
-                )
-                .withColumn(
-                    "alt_start_dates",
-                    F.array_sort(F.array_distinct(
-                        F.transform("alt_entries", lambda e: e["start_date"])
-                    )),
-                )
-                .withColumn(
-                    "alternative_names",
-                    F.transform(
-                        "alt_entries",
-                        lambda e: F.struct(
-                            e["name"].alias("name"),
-                            F.when(F.col("entity_type") == "people", F.lit(""))
-                            .otherwise(e["type"]).alias("type"),
-                            F.when(
-                                F.col("entity_type") == "events", e["start_date"]
-                            ).otherwise(F.lit("")).alias("start_date"),
-                        ),
-                    ),
-                )
-            )
-            # articles sample: union of the per-run earliest-first samples,
-            # re-capped with the same tournament as build_entities
-            from hinbox_spark.functions.skew import bounded_topk
-
-            art_rows = (
-                merged.select("entity_id", F.explode_outer("articles").alias("a"))
-                .unionByName(
-                    matched.select(
-                        F.col("store_id").alias("entity_id"),
-                        F.explode_outer("articles").alias("a"),
-                    )
-                )
-                .filter(F.col("a").isNotNull())
-                .select("entity_id", "a.url", "a.warc_ts", "a.title")
-                .dropDuplicates(["entity_id", "url"])
-            )
-            art_agg = (
-                bounded_topk(
-                    art_rows,
-                    keys=["entity_id"],
-                    order_by=[F.col("warc_ts"), F.col("url")],
-                    k=ENTITY_ARTICLES_CAP,
-                    salt_expr=F.xxhash64("url"),
-                )
-                .groupBy("entity_id")
-                .agg(
-                    F.array_sort(
-                        F.collect_list(F.struct("url", "warc_ts", "title"))
-                    ).alias("articles_new")
-                )
-            )
-            merged = (
-                merged.join(art_agg, "entity_id", "left")
-                .withColumn("articles", F.coalesce("articles_new", "articles"))
-                .drop("articles_new", "d_mentions", "d_articles", "d_ts",
-                      "d_aliases", "d_all_names", "d_entries")
-            )
-            # refresh the search embedding from the merged name+alias set
-            merged = _with_search_embedding(
-                merged.drop(
-                    "search_embedding", "search_embedding_model",
-                    "search_embedding_dim", "search_embedding_fingerprint",
-                ),
-                cfg,
-            )
-            if "partition_id" not in unmatched.columns:
-                unmatched = unmatched.withColumn(
-                    "partition_id", F.spark_partition_id()
-                )
-            upserts = merged.select(*store_entities.columns).unionByName(
-                unmatched.select(*store_entities.columns)
-            )
-
-        if "partition_id" not in upserts.columns:
-            upserts = upserts.withColumn("partition_id", F.spark_partition_id())
-        upserts = upserts.localCheckpoint()
+        matched = None if store_entities is None else store_entities.join(
+            assignments.select(F.col("store_id").alias("entity_id")),
+            "entity_id", "left_semi",
+        )
+        upserts = entity_upserts(clusters, ent_map, matched, cfg).localCheckpoint()
 
         # ── apply: every store commit and per-run write below is independent
         # of the others (disjoint tables; the profile rebuild consumes the

@@ -10,7 +10,7 @@ src/process_and_extract.py:545-565, re-expressed as tables):
   nodes      distinct mention keys           (1 shuffle on key)
   pairs      blocking joins                  (shuffles on blocking keys)
   clusters   connected components            (iterative, O(log n) shuffles)
-  entities   canonical entities              (1 shuffle on cluster_id)
+  entities   canonical entities              (the entity fold of each cluster)
   edges      (subj, pred, obj) triples
   profiles   versioned profiles + grounding
   review     gray-band deferred pairs
@@ -34,7 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from hinbox_spark import fs as hfs
 from hinbox_spark.config import DomainConfig, get_default_config
 from hinbox_spark.operators.canonicalize import (
-    build_clusters, build_edge_triples, build_entities, canonical_names,
+    build_clusters, build_edge_triples, build_entities, canonical_names, fold,
+    mention_facets,
 )
 from hinbox_spark.operators.clustering import connected_components
 from hinbox_spark.operators.extraction import (
@@ -93,35 +94,6 @@ def _write(df: DataFrame, base: str, name: str, partition_cols: list[str] | None
         local_frame(df.sparkSession, [], df.schema).repartition(1).write.mode(
             "overwrite"
         ).parquet(path)
-
-
-def _with_search_embedding(entities: DataFrame, cfg: DomainConfig) -> DataFrame:
-    """Reference schema parity (mergers.py:1301-1313): search_embedding =
-    deterministic encoding of the canonical name + aliases, plus the
-    model/dim/fingerprint metadata columns."""
-    from hinbox_spark.functions.embeddings import (
-        EMBEDDING_MODEL, embed_text, fingerprint,
-    )
-
-    dim = cfg.embedding_dim
-
-    @F.pandas_udf("array<float>")
-    def _embed(name: pd.Series, aliases: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                embed_text(f"{n} " + " ".join(list(a) if a is not None else []), dim).tolist()
-                for n, a in zip(name, aliases)
-            ]
-        )
-
-    return (
-        entities.withColumn(
-            "search_embedding", _embed(F.col("canonical_name"), F.col("aliases"))
-        )
-        .withColumn("search_embedding_model", F.lit(EMBEDDING_MODEL))
-        .withColumn("search_embedding_dim", F.lit(dim))
-        .withColumn("search_embedding_fingerprint", F.lit(fingerprint(dim=dim)))
-    )
 
 
 def _with_profile_embedding(profiles: DataFrame, cfg: DomainConfig) -> DataFrame:
@@ -326,8 +298,9 @@ def resolve(
         nodes.select("node_id"), accepted.select("src", "dst")
     )
     clusters = build_clusters(mentions, nodes, labels, articles).cache()
-    entities = _with_search_embedding(
-        build_entities(clusters, canonical_names(clusters)), cfg
+    # each cluster's mentions fold into one entity row (canonicalize.py)
+    entities = build_entities(
+        canonical_names(fold(mention_facets(clusters))), cfg
     )
     return Resolution(
         nodes, band_entries, pairs, accepted, review, clusters, entities

@@ -25,11 +25,7 @@ def _session_settings_kept(request):
         yield
         return
     spark = request.getfixturevalue("spark")
-    # the app name is a label: get_spark(app_name) on the running session
-    # (the CLI does) relabels it without changing how anything runs
-    keys = [
-        k for k, _ in spark.sparkContext.getConf().getAll() if k != "spark.app.name"
-    ]
+    keys = [k for k, _ in spark.sparkContext.getConf().getAll()]
 
     def settings() -> dict:
         return {k: spark.conf.get(k, None) for k in keys}

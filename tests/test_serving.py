@@ -2,6 +2,7 @@
 
 import datetime
 
+import pyspark.sql.functions as F
 import pytest
 
 from hinbox_spark.operators.serving import (
@@ -142,7 +143,9 @@ class TestReferenceShapedEntities:
         """The superset struct must pair each alternative with ITS OWN
         type/start_date (reference stores the alt key's attributes), not
         the canonical entity's."""
-        from hinbox_spark.operators.canonicalize import canonical_names
+        from hinbox_spark.operators.canonicalize import (
+            canonical_names, fold, mention_facets,
+        )
 
         mc = spark.createDataFrame(
             [
@@ -151,8 +154,11 @@ class TestReferenceShapedEntities:
             ],
             "cluster_id string, entity_type string, name string, "
             "type_attr string, start_date string",
+        ).select(
+            "*", F.lit("u1").alias("url"), F.lit(None).cast("timestamp").alias("warc_ts"),
+            F.lit("t").alias("title"), F.array().cast("array<string>").alias("aliases"),
         )
-        canon = canonical_names(mc).first()
+        canon = canonical_names(fold(mention_facets(mc))).first()
         alts = [e.asDict() for e in canon["alt_entries"]]
         assert {"name": "Pretrial Session", "type": "session",
                 "start_date": "2008-06-02"} in alts or \
