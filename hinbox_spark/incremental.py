@@ -35,28 +35,32 @@ and the store tables are updated with atomic snapshot commits:
                    tables instead of running pandas passes over all
                    store entities
 
-Store mutations are applied as a RUN TRANSACTION: every table's pre-run
-head is journaled before the first commit, the journal finalizes only
-after the last commit (the processed-pages log, deliberately last), and
-`_recover_stale_runs` rolls every table back to its journaled head when a
-previous run crashed mid-apply — a retry with the same delta then applies
-it exactly once (single-writer model, like the reference).
+Store mutations are applied as a RUN TRANSACTION (`commit_run`): every
+table's pre-run head is journaled before the first commit, the journal
+finalizes only after the last commit (the processed-pages log, deliberately
+last), and `_recover_stale_runs` rolls every table back to its journaled
+head when a previous run crashed mid-apply — a retry with the same delta
+then applies it exactly once (single-writer model, like the reference).
 
 The batch pipeline (`run_pipeline`) with `snapshot_store_path` set is the
-bootstrap: it seeds the same store tables, after which any number of
-incremental runs apply deltas. Because both runs fold entities with the
-same code, a store that bootstrap + deltas built equals a from-scratch batch
-run over the union corpus (same entity set, aliases, counters, profiles)
-wherever the store matches are decided deterministically — pinned in
-tests/test_incremental_store.py. The documented divergences are the
-incremental-mode invariants themselves (sticky canonical names, store-store
-merges deferred to the review queue as "bridge" disputes).
+bootstrap: it commits its run through the same `commit_run`, under a run id
+derived from its output directory, so a bootstrap that crashed mid-commit
+is rolled back and finished by `run_pipeline(resume=True)` on the same
+output. After it any number of incremental runs apply deltas. Because both
+runs fold entities with the same code, a store that bootstrap + deltas
+built equals a from-scratch batch run over the union corpus (same entity
+set, aliases, counters, profiles) wherever the store matches are decided
+deterministically — pinned in tests/test_incremental_store.py. The
+documented divergences are the incremental-mode invariants themselves
+(sticky canonical names, store-store merges deferred to the review queue as
+"bridge" disputes).
 """
 
 from __future__ import annotations
 
 import json
 import uuid
+from collections.abc import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -89,6 +93,30 @@ PAGES_LOG, FACTS, CITED, PROFILES = (
 NAME_INDEX, NAME_BANDS = "name_index", "name_bands"
 
 
+# every store table a run writes — the rollback scope of the run
+# transaction (order irrelevant; rollbacks are per-table atomic) — and its
+# `maintain_store` compaction plan: (key columns, sort order), or None for
+# the review queue, which is never folded by key
+_TABLE_PLANS = {
+    ENTITIES: (["entity_id"], ["entity_id"]),
+    PROFILES: (["entity_id"], ["entity_id"]),
+    FACTS: (["entity_id", "url"], ["entity_id", "url"]),
+    CITED: (["url"], ["url"]),
+    EDGES: (["subj", "pred", "obj"], ["subj", "pred"]),
+    PAGES_LOG: (["url", "content_hash"], ["url"]),
+    NAME_INDEX: (
+        ["entity_id", "entity_type", "match_key"],
+        ["entity_type", "match_key"],
+    ),
+    NAME_BANDS: (
+        ["entity_type", "node_id", "band"],
+        ["entity_type", "band", "bh"],
+    ),
+    QUEUE: None,
+}
+_RUN_TABLES = tuple(_TABLE_PLANS)
+
+
 def _st(spark: SparkSession, store: str, name: str) -> SnapshotTable:
     return SnapshotTable(spark, store.rstrip("/") + "/" + name)
 
@@ -97,47 +125,6 @@ def _exists(st: SnapshotTable) -> bool:
     # a table rolled back to the empty state (crashed first write) has a
     # head snapshot with zero batches — treat it as absent, like pre-create
     return st.n_batches() > 0
-
-
-def seed_store_from_run(
-    spark: SparkSession,
-    cfg: DomainConfig,
-    mention_clusters: DataFrame,
-    entities: DataFrame,
-    articles: DataFrame,
-    profiles: DataFrame,
-    edges: DataFrame,
-) -> None:
-    """Bootstrap the incremental store tables from a batch run's outputs
-    (called by run_pipeline when snapshot_store_path is set, after the
-    entities snapshot commit). Seeds edges / profile_facts /
-    cited_articles / profiles / processed_pages so later `run_incremental`
-    calls can rebuild merged profiles and skip already-processed pages."""
-    store = cfg.snapshot_store_path
-    # eager: the FACTS append and the cited projection below both consume
-    # these rows — materialize once
-    facts = profile_fact_rows(mention_clusters).join(
-        entities.select("cluster_id", "entity_id"), "cluster_id"
-    ).drop("cluster_id").localCheckpoint()
-    _st(spark, store, FACTS).append(facts)
-    cited = articles.join(
-        facts.select("url").distinct(), "url"
-    ).select("url", "text")
-    _st(spark, store, CITED).append(cited)
-    _st(spark, store, PROFILES).merge(profiles)
-    _st(spark, store, EDGES).append(
-        edges.withColumn("run_id", F.lit("bootstrap"))
-    )
-    # blocking-index tables: delta runs block against these columnar keys
-    # instead of re-deriving them from all store entities
-    idx = name_index_rows(entities).localCheckpoint()
-    _st(spark, store, NAME_INDEX).append(idx)
-    _st(spark, store, NAME_BANDS).append(name_band_rows(idx, cfg))
-    _st(spark, store, PAGES_LOG).append(
-        articles.select("url", "content_hash").withColumn(
-            "run_id", F.lit("bootstrap")
-        )
-    )
 
 
 def _rebuild_profiles(
@@ -203,16 +190,21 @@ def _rebuild_profiles(
     return _with_profile_embedding(profiles, cfg)
 
 
-# every store table a delta run mutates — the rollback scope of the
-# run transaction (order irrelevant; rollbacks are per-table atomic)
-_RUN_TABLES = (
-    ENTITIES, EDGES, QUEUE, FACTS, CITED, PROFILES, PAGES_LOG,
-    NAME_INDEX, NAME_BANDS,
-)
-
-
 def _runs_dir(store: str) -> str:
     return store.rstrip("/") + "/_runs"
+
+
+def _finalized(spark: SparkSession, store: str, run_id: str) -> bool:
+    return hfs.exists(spark, _runs_dir(store) + f"/{run_id}.json")
+
+
+def _bootstrap_run_id(output_dir: str) -> str:
+    """A batch bootstrap's run id: derived from its output directory, so a
+    resumed bootstrap finishes its own run transaction, and two outputs
+    never share one."""
+    return "bootstrap-" + uuid.uuid5(
+        uuid.NAMESPACE_URL, output_dir.rstrip("/")
+    ).hex
 
 
 def _recover_stale_runs(spark: SparkSession, store: str) -> list[str]:
@@ -233,7 +225,7 @@ def _recover_stale_runs(spark: SparkSession, store: str) -> list[str]:
         if not name.endswith(".pending.json"):
             continue
         rid = name[: -len(".pending.json")]
-        if hfs.exists(spark, runs + f"/{rid}.json"):
+        if _finalized(spark, store, rid):
             # finalized concurrently with the crash window — pending file
             # is just leftover; drop it
             hfs.delete(spark, runs + "/" + name)
@@ -265,27 +257,13 @@ def maintain_store(
     This is the Iceberg maintenance loop (rewrite_data_files +
     expire_snapshots) for the incremental store: without it a nightly
     delta adds ~7 batches/run forever and read cost grows O(runs)."""
-    plans = {
-        ENTITIES: (["entity_id"], ["entity_id"]),
-        PROFILES: (["entity_id"], ["entity_id"]),
-        FACTS: (["entity_id", "url"], ["entity_id", "url"]),
-        CITED: (["url"], ["url"]),
-        EDGES: (["subj", "pred", "obj"], ["subj", "pred"]),
-        PAGES_LOG: (["url", "content_hash"], ["url"]),
-        NAME_INDEX: (
-            ["entity_id", "entity_type", "match_key"],
-            ["entity_type", "match_key"],
-        ),
-        NAME_BANDS: (
-            ["entity_type", "node_id", "band"],
-            ["entity_type", "band", "bh"],
-        ),
-    }
     touched: dict[str, int] = {}
-    for name, (key_cols, sort_by) in plans.items():
+    for name, plan in _TABLE_PLANS.items():
+        if plan is None:
+            continue
         st = _st(spark, cfg.snapshot_store_path, name)
         if st.n_batches() > max_batches:
-            touched[name] = st.compact(key_cols, sort_by=sort_by)
+            touched[name] = st.compact(plan[0], sort_by=plan[1])
             st.expire_snapshots(keep_last=keep_snapshots)
     return touched
 
@@ -319,6 +297,108 @@ def entity_upserts(
     if store_rows is not None:
         facets = facets.unionByName(entity_facets(store_rows))
     return build_entities(canonical_names(fold(facets)), cfg)
+
+
+def commit_run(
+    spark: SparkSession,
+    cfg: DomainConfig,
+    ov: pl.overlap,
+    run_id: str,
+    clusters: DataFrame,
+    ent_map: DataFrame,
+    entities: DataFrame,
+    articles: DataFrame,
+    review: DataFrame,
+    edges: Callable[[], DataFrame],
+    profiles: Callable[[DataFrame, DataFrame], DataFrame],
+) -> None:
+    """Commit one run to the store at `cfg.snapshot_store_path` as a RUN
+    TRANSACTION — the one store write of the batch bootstrap and of a delta
+    run.
+
+    ``clusters`` are the run's mention rows, ``ent_map`` maps each of their
+    cluster_ids to an entity_id, ``entities`` are the entity rows to upsert,
+    ``articles`` and ``review`` the run's articles and review rows.
+    ``edges()`` gives the edge rows to append (called on a background
+    thread); ``profiles(facts, cited)`` gives the profile rows to upsert
+    from the run's fact rows and cited articles (called on this thread,
+    the long pole). The background commits go to ``ov``. Every row the run
+    writes carries ``run_id``."""
+    store = cfg.snapshot_store_path
+    runs = _runs_dir(store)
+
+    def st(name: str) -> SnapshotTable:
+        return _st(spark, store, name)
+
+    def attributed(df: DataFrame) -> DataFrame:
+        return df.withColumn("run_id", F.lit(run_id))
+
+    # record every table's pre-run head BEFORE the first commit; a crash
+    # anywhere below leaves this pending record, and the next run's
+    # _recover_stale_runs rolls all tables back to these heads — so the
+    # retry applies the run exactly once. A journal left by an earlier run
+    # with this id is dropped first: recovery would take it for this run's.
+    hfs.mkdirs(spark, runs)
+    hfs.delete(spark, runs + f"/{run_id}.json")
+    heads = {t: st(t).latest_snapshot_id() for t in _RUN_TABLES}
+    hfs.write_text(spark, runs + f"/{run_id}.pending.json", json.dumps(heads))
+
+    # eager: three concurrent consumers (facts append, cited build, profile
+    # rebuild) must share materialized blocks, not race a lazy checkpoint.
+    # Re-reduced per (entity_id, url) AFTER the remap: two clusters that
+    # land in one entity would otherwise leave duplicate fact keys —
+    # duplicate rows consume profile-cap slots (dropping a legitimate url
+    # from the rebuilt profile) and make the stored row per key a
+    # nondeterministic tie. The re-reduction is the same min/max fold the
+    # batch path applies over the merged cluster.
+    facts = (
+        profile_fact_rows(clusters)
+        .join(ent_map.select("cluster_id", "entity_id"), "cluster_id")
+        .groupBy("entity_id", "url")
+        .agg(
+            F.min("warc_ts").alias("warc_ts"),
+            F.max("description").alias("description"),
+            F.max("start_date").alias("start_date"),
+        )
+        .localCheckpoint()
+    )
+    cited = articles.join(facts.select("url").distinct(), "url").select(
+        "url", "text"
+    ).localCheckpoint()  # eager: CITED append ∥ grounding both consume it
+
+    # every commit below is independent of the others (disjoint tables; a
+    # profile rebuild consumes the PRE-append facts snapshot plus the
+    # in-memory facts), so they run as CONCURRENT Spark jobs from driver
+    # threads — the fixed tail of a run is ~a dozen small commits
+    ov.submit(st(ENTITIES).merge, entities)
+    ov.submit(lambda: st(EDGES).append(attributed(edges())))
+    ov.submit(st(QUEUE).append, attributed(review))
+    ov.submit(st(FACTS).append, facts)
+    ov.submit(st(CITED).append, cited)
+    # blocking-index maintenance: ONLY the upserted entities' name rows are
+    # (re)computed; duplicates vs prior index rows are deduped at read and
+    # folded by compaction
+    idx = name_index_rows(entities).localCheckpoint()
+    ov.submit(st(NAME_INDEX).append, idx)
+    ov.submit(st(NAME_BANDS).append, name_band_rows(idx, cfg))
+    st(PROFILES).merge(profiles(facts, cited))
+    ov.join()
+
+    # processed-pages log (cross-run F2) — committed LAST, strictly after
+    # every other commit succeeded: a crash anywhere above leaves the pages
+    # un-logged, so re-running the same pages reprocesses them; logging them
+    # concurrently would let a partial failure mark pages processed while
+    # their contributions were never applied, and a rerun would then skip
+    # them forever
+    st(PAGES_LOG).append(attributed(articles.select("url", "content_hash")))
+
+    # finalize: publish the journal (create-exclusive) and drop the pending
+    # record — from here the run can never be rolled back by recovery
+    tmp = runs + f"/_tmp-{run_id}.json"
+    hfs.write_text(spark, tmp, json.dumps({"run_id": run_id, "tables": heads}))
+    if not hfs.publish_without_overwrite(spark, tmp, runs + f"/{run_id}.json"):
+        hfs.delete(spark, tmp)  # another writer finalized this run id
+    hfs.delete(spark, runs + f"/{run_id}.pending.json")
 
 
 def run_incremental(
@@ -459,124 +539,31 @@ def run_incremental(
             )
         # eager: the fact rows, the edges and the upserts all join it
         ent_map = ent_map.localCheckpoint()
-        # eager: three concurrent consumers below (facts append, cited build,
-        # profile rebuild) must share materialized blocks, not race a lazy
-        # checkpoint. Re-reduced per (entity_id, url) AFTER the remap: two
-        # delta clusters assigned to the same store entity would otherwise
-        # leave duplicate fact keys — duplicate rows consume profile-cap slots
-        # (dropping a legitimate url from the rebuilt profile) and make the
-        # stored row per key a nondeterministic tie. The re-reduction is the
-        # same min/max fold the batch path applies over the merged cluster.
-        facts = (
-            profile_fact_rows(clusters)
-            .join(ent_map.select("cluster_id", "entity_id"), "cluster_id")
-            .groupBy("entity_id", "url")
-            .agg(
-                F.min("warc_ts").alias("warc_ts"),
-                F.max("description").alias("description"),
-                F.max("start_date").alias("start_date"),
-            )
-            .localCheckpoint()
-        )
-
         matched = None if store_entities is None else store_entities.join(
             assignments.select(F.col("store_id").alias("entity_id")),
             "entity_id", "left_semi",
         )
         upserts = entity_upserts(clusters, ent_map, matched, cfg).localCheckpoint()
 
-        # ── apply: every store commit and per-run write below is independent
-        # of the others (disjoint tables; the profile rebuild consumes the
-        # PRE-append facts snapshot plus the in-memory delta facts), so they
-        # run as CONCURRENT Spark jobs from driver threads — the delta run's
-        # fixed tail is ~a dozen small commits, and overlapping them is what
-        # keeps a nightly delta cheaper than its corpus share.
-
-        # ── run transaction: record every mutated table's pre-run head BEFORE
-        # the first commit; a crash anywhere below leaves this pending record,
-        # and the next run's _recover_stale_runs rolls all tables back to
-        # these heads — so the retry applies the delta exactly once ──
-        hfs.mkdirs(spark, _runs_dir(store))
-        heads = {
-            t: _st(spark, store, t).latest_snapshot_id() for t in _RUN_TABLES
-        }
-        hfs.write_text(
-            spark,
-            _runs_dir(store) + f"/{run_id}.pending.json",
-            json.dumps(heads),
-        )
-
-        edges = build_edge_triples(clusters, ent_map)
+        # ── apply: the per-run writes overlap the store commit ──
+        edge_rows = build_edge_triples(clusters, ent_map)
         review = review1.unionByName(review2, allowMissingColumns=True)
-        cited = articles.join(facts.select("url").distinct(), "url").select(
-            "url", "text"
-        ).localCheckpoint()  # eager: CITED append ∥ grounding both consume it
+        ov.submit(_write, upserts, output_dir, "entities_delta", ["entity_type"])
+        ov.submit(_write, review, output_dir, "review")
 
-        def _edges_task():
-            _write(edges, output_dir, "edges", ["pred"])
-            back = spark.read.parquet(_table_path(output_dir, "edges"))
-            _st(spark, store, EDGES).append(
-                back.withColumn("run_id", F.lit(run_id))
-            )
+        def _edges():
+            _write(edge_rows, output_dir, "edges", ["pred"])
+            return spark.read.parquet(_table_path(output_dir, "edges"))
 
-        def _review_task():
-            # append the pre-write frame (no partition_id) — same shape as the
-            # batch bootstrap's queue rows, so cross-run queue reads union
-            _st(spark, store, QUEUE).append(
-                review.withColumn("run_id", F.lit(run_id))
-            )
-            _write(review, output_dir, "review")
-
-        def _profiles_task():
+        def _profiles(facts, cited):
             profiles = _rebuild_profiles(spark, store, cfg, upserts, facts, cited)
             _write(profiles, output_dir, "profiles")
-            back = spark.read.parquet(_table_path(output_dir, "profiles"))
-            _st(spark, store, PROFILES).merge(back)
+            return spark.read.parquet(_table_path(output_dir, "profiles"))
 
-        ov.submit(st_entities.merge, upserts)
-        ov.submit(_write, upserts, output_dir, "entities_delta", ["entity_type"])
-        ov.submit(_edges_task)
-        ov.submit(_review_task)
-        ov.submit(_st(spark, store, FACTS).append, facts)
-        ov.submit(_st(spark, store, CITED).append, cited)
-        # blocking-index maintenance: ONLY the upserted entities' name
-        # rows are (re)computed — delta-sized work; duplicates vs prior
-        # index rows are deduped at read and folded by compaction
-        idx_new = name_index_rows(upserts).localCheckpoint()
-        ov.submit(_st(spark, store, NAME_INDEX).append, idx_new)
-        ov.submit(
-            _st(spark, store, NAME_BANDS).append, name_band_rows(idx_new, cfg)
+        commit_run(
+            spark, cfg, ov, run_id, clusters, ent_map, upserts, articles,
+            review, _edges, _profiles,
         )
-        # profiles rebuild is the long pole — run it on the main thread
-        _profiles_task()
-        ov.join()
-
-        # ── processed-pages log (cross-run F2) — committed LAST, strictly
-        # after every entity/fact/profile commit has succeeded: a crash
-        # anywhere above leaves the pages un-logged, so the documented
-        # recovery (re-run the same delta) reprocesses them; logging them
-        # concurrently would let a partial failure mark pages processed while
-        # their contributions were never applied, and the rerun would then
-        # skip them forever ──
-        st_pages.append(
-            articles.select("url", "content_hash").withColumn(
-                "run_id", F.lit(run_id)
-            )
-        )
-
-        # finalize the run transaction: publish the journal (create-exclusive)
-        # and drop the pending record — from here the run can never be rolled
-        # back by recovery
-        tmp = _runs_dir(store) + f"/_tmp-{run_id}.json"
-        hfs.write_text(spark, tmp, json.dumps({"run_id": run_id, "tables": heads}))
-        if not hfs.publish_without_overwrite(
-            spark, tmp, _runs_dir(store) + f"/{run_id}.json"
-        ):
-            # same run_id already finalized (a re-delivered streaming epoch
-            # whose content-hash skip made this run an empty no-op): drop the
-            # loser's temp, keep the original journal
-            hfs.delete(spark, tmp)
-        hfs.delete(spark, _runs_dir(store) + f"/{run_id}.pending.json")
 
         edges = spark.read.parquet(_table_path(output_dir, "edges"))
         review = spark.read.parquet(_table_path(output_dir, "review"))

@@ -20,6 +20,8 @@ The extraction steps (`relevant_articles`, `extract_mentions`), the entity
 resolution chain (`resolve`: nodes → pairs → components → entities) and the
 background-work block (`overlap`) are shared with the delta path in
 `incremental.run_incremental`, so both runs build entities the same way.
+With `snapshot_store_path` set, the run is the store's bootstrap and ends
+in the delta run's store commit (`incremental.commit_run`).
 """
 
 from __future__ import annotations
@@ -338,8 +340,21 @@ def run_pipeline(
     def done(*names: str) -> bool:
         return resume and all(_done(spark, output_dir, n) for n in names)
 
+    def read(name: str) -> DataFrame:
+        return spark.read.parquet(_table_path(output_dir, name))
+
     cfg = cfg or get_default_config()
     hfs.mkdirs(spark, output_dir)
+    store = cfg.snapshot_store_path
+    if store:
+        # with a store configured this run is its bootstrap, committed by
+        # the delta run's transaction. A crashed run's partial commits (this
+        # output's own among them) are rolled back first; the run id is
+        # this output's, so a resume finishes the commit it left open.
+        from hinbox_spark import incremental as inc
+
+        inc._recover_stale_runs(spark, store)
+        run_id = inc._bootstrap_run_id(output_dir)
 
     # run-level counters (filled by the stages below when they execute;
     # empty on a resumed run whose stages were skipped)
@@ -366,20 +381,23 @@ def run_pipeline(
             else:
                 _write(articles, output_dir, "articles")
         elif extract:
-            articles = spark.read.parquet(_table_path(output_dir, "articles"))
+            articles = read("articles")
         mentions, qc_flags = extract_mentions(
             spark, articles if extract else None, output_dir, cfg, cache_stats
         )
         ov.join()
         _mark("extract")
-        articles = spark.read.parquet(_table_path(output_dir, "articles"))
+        articles = read("articles")
 
         # ── stages 3-5: linking → clustering → canonicalization ──
         # the gate must include EVERY table the block writes — profiles is
         # written last, so a crash between edges and profiles would
         # otherwise leave a resume state that skips the block and then
-        # fails reading the missing profiles table (wedged checkpoint dir)
-        if not done("entities", "edges", "review", "decisions", "profiles"):
+        # fails reading the missing profiles table (wedged checkpoint dir) —
+        # and the store commit, which needs the block's cached clusters
+        if not done("entities", "edges", "review", "decisions", "profiles") or (
+            store and not inc._finalized(spark, store, run_id)
+        ):
             r = resolve(mentions, articles, cfg)
             ov.release(r.nodes, r.clusters)
             band_entries = r.band_entries
@@ -433,22 +451,6 @@ def run_pipeline(
             # wall-clock (at N cores everything is compute-bound and the
             # overlap costs nothing)
             ov.submit(_write, r.review, output_dir, "review")
-            if cfg.snapshot_store_path:
-                # append-only review queue (reference parity: the dispute
-                # queue is append-only JSONL — humans drain it across
-                # runs). The per-run review table stays overwrite; the
-                # queue accumulates every run's rows with attribution.
-                import uuid as _uuid
-
-                from hinbox_spark.tables import SnapshotTable as _ST
-
-                ov.submit(
-                    _ST(
-                        spark,
-                        cfg.snapshot_store_path.rstrip("/") + "/review_queue",
-                    ).append,
-                    r.review.withColumn("run_id", F.lit(_uuid.uuid4().hex)),
-                )
             ov.submit(_write, decisions, output_dir, "decisions")
             # NOTE: overlapping the expensive half of the metrics stage
             # (full pages/articles/mentions scans) with the clustering
@@ -460,25 +462,13 @@ def run_pipeline(
             # in the final stage where the cluster is otherwise idle.
 
             _write(r.entities, output_dir, "entities", ["entity_type"])
-            entities = spark.read.parquet(_table_path(output_dir, "entities"))
-
-            # optional Iceberg-shaped entity store: publish this run's
-            # entities as an atomic snapshot commit (merge-on-read upsert
-            # by entity_id — a re-run of the same corpus supersedes, never
-            # duplicates)
-            if cfg.snapshot_store_path:
-                from hinbox_spark.tables import SnapshotTable
-
-                SnapshotTable(
-                    spark, cfg.snapshot_store_path.rstrip("/") + "/entities"
-                ).merge(entities)
-
+            entities = read("entities")
             _mark("cluster_entities")
             # edges and profiles both read only the cached clusters and the
             # written entities table — independent jobs, overlapped the
             # same way as decisions
             edges = build_edge_triples(r.clusters, entities)
-            edges_future = ov.submit(_write, edges, output_dir, "edges", ["pred"])
+            ov.submit(_write, edges, output_dir, "edges", ["pred"])
 
             # ── stage 6: profiles + grounding ──
             profiles = build_profiles(r.clusters, entities)
@@ -486,28 +476,23 @@ def run_pipeline(
             profiles = _with_profile_embedding(profiles, cfg)
             _write(profiles, output_dir, "profiles")
 
-            if cfg.snapshot_store_path:
-                # bootstrap the incremental-store state tables (profile
-                # facts, cited texts, processed-pages log, edges/profiles)
-                # so run_incremental can apply deltas on top of this run.
-                # The edges append reuses the just-written parquet instead
-                # of re-running the provenance aggregation plan — wait for
-                # the background edges write first.
-                from hinbox_spark.incremental import seed_store_from_run
-
-                edges_future.result()
-                seed_store_from_run(
-                    spark, cfg, r.clusters, entities, articles,
-                    spark.read.parquet(_table_path(output_dir, "profiles")),
-                    spark.read.parquet(_table_path(output_dir, "edges")),
+            if store:
+                # the store commit reads the per-run tables as written
+                # (entity merge-on-read upsert by entity_id: a re-run of
+                # the same corpus supersedes, never duplicates)
+                ov.join()
+                inc.commit_run(
+                    spark, cfg, ov, run_id, r.clusters, entities, entities,
+                    articles, r.review, lambda: read("edges"),
+                    lambda facts, cited: read("profiles"),
                 )
             _mark("edges_profiles")
             ov.join()
 
-        entities = spark.read.parquet(_table_path(output_dir, "entities"))
-        edges = spark.read.parquet(_table_path(output_dir, "edges"))
-        profiles = spark.read.parquet(_table_path(output_dir, "profiles"))
-        review = spark.read.parquet(_table_path(output_dir, "review"))
+        entities = read("entities")
+        edges = read("edges")
+        profiles = read("profiles")
+        review = read("review")
 
         # ── metrics table: per-stage / per-partition lineage counters ──
         # partition_id is persisted at write time by _write, so the late
@@ -591,6 +576,6 @@ def run_pipeline(
         "edges": edges,
         "profiles": profiles,
         "review": review,
-        "decisions": spark.read.parquet(_table_path(output_dir, "decisions")),
-        "metrics": spark.read.parquet(_table_path(output_dir, "metrics")),
+        "decisions": read("decisions"),
+        "metrics": read("metrics"),
     }

@@ -32,8 +32,9 @@ import sys
 import zipimport
 
 # imported before the first fork; any that fail to import are skipped. The
-# hinbox_spark entries are the modules that ship UDFs (pipeline and
-# incremental pull in the KG operators).
+# hinbox_spark entries are the KG engine's modules (pipeline and incremental
+# pull in the operators that ship its UDFs); the rest of the package is
+# imported by a worker on demand.
 PRELOAD = (
     "numpy",
     "pandas",
@@ -43,15 +44,6 @@ PRELOAD = (
     "hinbox_spark.pipeline",
     "hinbox_spark.incremental",
     "hinbox_spark.sources.pages_gen",
-    "hinbox_spark.functions.urltools",
-    "hinbox_spark.operators.ann",
-    "hinbox_spark.operators.graph",
-    "hinbox_spark.operators.kge",
-    "hinbox_spark.operators.multimodal",
-    "hinbox_spark.operators.ranking",
-    "hinbox_spark.plans.queries",
-    "hinbox_spark.streaming.stateful",
-    "hinbox_spark.streaming.windows",
 )
 
 

@@ -8,8 +8,11 @@ the two properties a streaming sink needs —
     skip turns a re-delivered epoch into an empty delta whose apply is a
     no-op (the store head doesn't move), so foreachBatch's at-least-once
     contract composes to exactly-once EFFECTS on the store;
-  * crash atomicity: the run transaction journals pre-run heads and rolls
-    back partial applies before the next batch reads anything.
+  * crash atomicity: the run transaction (`incremental.commit_run`)
+    journals pre-run heads and rolls back partial applies before the next
+    batch reads anything. The batch bootstrap the stream starts from is
+    committed by the same transaction, so a crashed bootstrap is rolled
+    back too, and `run_pipeline(resume=True)` finishes it.
 Each epoch's per-run tables (articles, mentions, deltas, review, metrics)
 land under `output_root/batch-<epoch>/` for lineage.
 

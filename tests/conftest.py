@@ -46,8 +46,9 @@ def persistent_rdds(spark) -> set:
 
 @pytest.fixture(scope="session")
 def delta_world(spark, tmp_path_factory):
-    """A store bootstrapped by `run_pipeline` from 30 of 40 pages, its table
-    ``heads``, a pristine copy (`fork()` hands out fresh copies of it), and
+    """A store bootstrapped by `run_pipeline` from 30 of 40 pages
+    (``pages_a``, output ``base/batch``), its table ``heads``, a pristine
+    copy (``pristine``; `fork()` hands out fresh copies of it), and
     the control world: the remaining 10 pages applied with `run_incremental`
     (run_id "d"). Both runs go through a spy on `pipeline.resolve`; per run,
     ``runs`` records the resolve calls and the persistent RDDs left behind."""
@@ -98,5 +99,6 @@ def delta_world(spark, tmp_path_factory):
         shutil.copytree(base / "pristine", path)
         return path, dataclasses.replace(cfg, snapshot_store_path=path)
 
-    return {"pages": pages, "pages_b": pages_b, "store": store, "cfg": cfg,
+    return {"pages": pages, "pages_a": pages_a, "pages_b": pages_b,
+            "store": store, "pristine": str(base / "pristine"), "cfg": cfg,
             "heads": heads, "fork": fork, "runs": runs, "base": base}

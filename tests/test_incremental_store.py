@@ -368,3 +368,90 @@ def test_crash_mid_apply_recovers_exactly_once(spark, monkeypatch, delta_world):
         ra = sorted(map(tuple, a.select(*sorted(a.columns)).collect()))
         rb = sorted(map(tuple, b.select(*sorted(b.columns)).collect()))
         assert ra == rb, f"{table} diverged after crash recovery"
+
+
+def _raw_rows(spark, store, table):
+    """A store table's rows at its head, run attribution left out."""
+    df = SnapshotTable(spark, f"{store}/{table}").read()
+    cols = sorted(set(df.columns) - {"_seq", "run_id"})
+    return sorted(map(repr, df.select(*cols).collect()))
+
+
+@pytest.mark.parametrize(
+    "crash", ["build_profiles", "name_bands", "processed_pages"]
+)
+def test_crashed_bootstrap_is_finished_by_resume(
+    spark, monkeypatch, delta_world, crash
+):
+    """The batch bootstrap commits through the delta run's transaction. A
+    crash before the store commit (in build_profiles) leaves every store
+    table's head unchanged; a crash in a background commit (name_bands) or
+    in the last one (the processed-pages log) leaves a pending journal.
+    Either way `run_pipeline(resume=True)` on the same output rolls the
+    partial commits back and finishes the bootstrap: every store table then
+    holds the rows of an uncrashed bootstrap, none twice."""
+    import hinbox_spark.pipeline as pl
+    from hinbox_spark import fs as hfs
+    from hinbox_spark.incremental import (
+        _RUN_TABLES, _bootstrap_run_id, _runs_dir,
+    )
+
+    base = delta_world["base"]
+    store, out = str(base / f"boot-{crash}"), str(base / f"boot-{crash}-out")
+    cfg = dataclasses.replace(delta_world["cfg"], snapshot_store_path=store)
+
+    def boom(*a, **k):
+        raise RuntimeError("injected crash")
+
+    if crash == "build_profiles":
+        monkeypatch.setattr(pl, "build_profiles", boom)
+    else:
+        real = SnapshotTable.append
+
+        def append(self, df, *a, **k):
+            if self.path.endswith("/" + crash):
+                boom()
+            return real(self, df, *a, **k)
+
+        monkeypatch.setattr(SnapshotTable, "append", append)
+    if crash == "processed_pages":
+        # a journal an earlier run of this output finalized under the same
+        # run id must not pass this run's crash off as finalized
+        hfs.mkdirs(spark, _runs_dir(store))
+        hfs.write_text(
+            spark, f"{_runs_dir(store)}/{_bootstrap_run_id(out)}.json", "{}"
+        )
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_pipeline(spark, delta_world["pages_a"], out, cfg=cfg, resume=False)
+    monkeypatch.undo()
+    heads = {t: SnapshotTable(spark, f"{store}/{t}").latest_snapshot_id()
+             for t in _RUN_TABLES}
+    if crash == "build_profiles":
+        assert set(heads.values()) == {None}
+    else:
+        assert hfs.exists(
+            spark, f"{_runs_dir(store)}/{_bootstrap_run_id(out)}.pending.json"
+        )
+
+    run_pipeline(spark, delta_world["pages_a"], out, cfg=cfg, resume=True)
+    for table in _RUN_TABLES:
+        assert _raw_rows(spark, store, table) == _raw_rows(
+            spark, delta_world["pristine"], table
+        ), f"{table} differs from the uncrashed bootstrap"
+
+
+def test_bootstrap_rows_carry_its_run_id(spark, delta_world):
+    """Every row a bootstrap writes carries one run id: the one its
+    finalized journal is published under."""
+    from hinbox_spark import fs as hfs
+    from hinbox_spark.incremental import _bootstrap_run_id, _runs_dir
+
+    store = delta_world["pristine"]
+    rid = _bootstrap_run_id(str(delta_world["base"] / "batch"))
+    assert hfs.exists(spark, f"{_runs_dir(store)}/{rid}.json")
+    for table in ("edges", "processed_pages", "review_queue"):
+        df = SnapshotTable(spark, f"{store}/{table}").read()
+        ids = {r.run_id for r in df.select("run_id").distinct().collect()}
+        if table != "review_queue":
+            assert df.count() > 0, table
+        assert ids == ({rid} if df.count() else set()), table
