@@ -39,8 +39,8 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--incremental", action="store_true",
                    help="apply the pages as a DELTA against --store "
                         "(run_incremental: O(|delta|) work, content-hash "
-                        "skip, atomic run transaction) instead of a full "
-                        "batch run")
+                        "skip, one atomically published store version) "
+                        "instead of a full batch run")
     p.add_argument("--configs-dir", default=None,
                    help="domain-config root (configs/{domain}/config.yaml "
                         "+ categories/*.yaml, the reference layout)")

@@ -79,19 +79,6 @@ def write_text(spark: SparkSession, path: str, text: str) -> None:
         stream.close()
 
 
-def rename(spark: SparkSession, src: str, dst: str) -> bool:
-    """Rename WITHOUT overwrite: returns False when dst already exists.
-    On HDFS the underlying rename is atomic no-overwrite; on local/posix
-    Hadoop's rename can clobber, so the existence pre-check supplies the
-    no-overwrite contract (with a small TOCTOU window acceptable for a
-    single-host sandbox — on a real cluster HDFS/S3A semantics apply)."""
-    fs, s = _fs_and_path(spark, src)
-    _, d = _fs_and_path(spark, dst)
-    if fs.exists(d):
-        return False
-    return bool(fs.rename(s, d))
-
-
 def publish_without_overwrite(spark: SparkSession, src: str, dst: str) -> bool:
     """Publish a fully-written temp file at its final name, failing
     (returning False) when dst already exists — the commit primitive for

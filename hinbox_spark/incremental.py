@@ -35,17 +35,18 @@ and the store tables are updated with atomic snapshot commits:
                    tables instead of running pandas passes over all
                    store entities
 
-Store mutations are applied as a RUN TRANSACTION (`commit_run`): every
-table's pre-run head is journaled before the first commit, the journal
-finalizes only after the last commit (the processed-pages log, deliberately
-last), and `_recover_stale_runs` rolls every table back to its journaled
-head when a previous run crashed mid-apply — a retry with the same delta
-then applies it exactly once (single-writer model, like the reference).
+Store mutations are applied as one RUN (`commit_run`) whose commit point is
+one STORE VERSION, `store/_versions/version-<n>.json` = {version, run_id,
+tables: {table: snapshot_id}}, published create-exclusive after the last
+table commit. A run reads every store table at the published version
+(`store_version`), so no reader sees a half-applied run; the next writer
+rolls back whatever a crashed run committed past it, so a retry applies the
+delta exactly once (single-writer model, like the reference).
 
 The batch pipeline (`run_pipeline`) with `snapshot_store_path` set is the
 bootstrap: it commits its run through the same `commit_run`, under a run id
-derived from its output directory, so a bootstrap that crashed mid-commit
-is rolled back and finished by `run_pipeline(resume=True)` on the same
+derived from its output directory, so a bootstrap that crashed before its
+version was published is finished by `run_pipeline(resume=True)` on the same
 output. After it any number of incremental runs apply deltas. Because both
 runs fold entities with the same code, a store that bootstrap + deltas
 built equals a from-scratch batch run over the union corpus (same entity
@@ -81,7 +82,7 @@ from hinbox_spark.operators.store_link import (
 )
 from hinbox_spark.pipeline import _table_path, _with_profile_embedding, _write
 from hinbox_spark.session import local_frame
-from hinbox_spark.tables import SnapshotTable
+from hinbox_spark.tables import CommitConflict, SnapshotTable
 
 # store-relative table names
 ENTITIES, EDGES, QUEUE = "entities", "edges", "review_queue"
@@ -93,10 +94,9 @@ PAGES_LOG, FACTS, CITED, PROFILES = (
 NAME_INDEX, NAME_BANDS = "name_index", "name_bands"
 
 
-# every store table a run writes — the rollback scope of the run
-# transaction (order irrelevant; rollbacks are per-table atomic) — and its
-# `maintain_store` compaction plan: (key columns, sort order), or None for
-# the review queue, which is never folded by key
+# every store table a run writes — the tables a store version pins — and
+# its `maintain_store` compaction plan: (key columns, sort order), or None
+# for the review queue, which is never folded by key
 _TABLE_PLANS = {
     ENTITIES: (["entity_id"], ["entity_id"]),
     PROFILES: (["entity_id"], ["entity_id"]),
@@ -121,27 +121,77 @@ def _st(spark: SparkSession, store: str, name: str) -> SnapshotTable:
     return SnapshotTable(spark, store.rstrip("/") + "/" + name)
 
 
-def _exists(st: SnapshotTable) -> bool:
-    # a table rolled back to the empty state (crashed first write) has a
-    # head snapshot with zero batches — treat it as absent, like pre-create
-    return st.n_batches() > 0
+def _heads(spark: SparkSession, store: str) -> dict[str, int | None]:
+    return {t: _st(spark, store, t).latest_snapshot_id() for t in _RUN_TABLES}
+
+
+def _version_files(spark: SparkSession, store: str) -> list[str]:
+    """The store's published version files, oldest first."""
+    return [f for f in hfs.list_files(spark, store.rstrip("/") + "/_versions")
+            if f.rsplit("/", 1)[-1].startswith("version-")]
+
+
+def store_version(spark: SparkSession, store: str) -> dict:
+    """The store's published version {"version", "run_id", "tables": {table:
+    snapshot_id}}, at which a run reads every store table (None: not in the
+    store). A store without one (written before versions existed) is read
+    at its table heads, as version None."""
+    files = _version_files(spark, store)
+    if files:
+        return json.loads(hfs.read_text(spark, files[-1]))
+    return {"version": None, "run_id": None, "tables": _heads(spark, store)}
+
+
+def _publish_version(
+    spark: SparkSession, store: str, version: int, run_id: str | None,
+    tables: dict[str, int | None],
+) -> dict:
+    """Publish a store version create-exclusive, like a table snapshot
+    commit: of two writers of one version number, one fails."""
+    v = {"version": version, "run_id": run_id, "tables": tables}
+    d = store.rstrip("/") + "/_versions/"
+    tmp = d + f"_tmp-{uuid.uuid4().hex}.json"
+    hfs.write_text(spark, tmp, json.dumps(v))
+    if not hfs.publish_without_overwrite(spark, tmp, f"{d}version-{version:012d}.json"):
+        hfs.delete(spark, tmp)
+        raise CommitConflict(f"store version {version} of {store} exists")
+    return v
+
+
+def _published(spark: SparkSession, store: str, run_id: str) -> bool:
+    return any(json.loads(hfs.read_text(spark, f))["run_id"] == run_id
+               for f in reversed(_version_files(spark, store)))
+
+
+def _begin(spark: SparkSession, store: str) -> dict:
+    """The version a store writer starts from, every table head rolled back
+    to it. A store without one first gets its heads published as version 0,
+    so that a crash of this writer leaves the store as it was."""
+    v = store_version(spark, store)
+    if v["version"] is None:
+        v = _publish_version(spark, store, 0, None, v["tables"])
+    for t, head in _heads(spark, store).items():
+        if head != v["tables"][t]:
+            _st(spark, store, t).rollback_to(v["tables"][t])
+    return v
 
 
 def _rebuild_profiles(
     spark: SparkSession,
     store: str,
+    version: dict[str, int | None],
     cfg: DomainConfig,
     affected_entities: DataFrame,
     delta_facts: DataFrame,
     delta_cited: DataFrame,
 ) -> DataFrame:
     """Re-assemble profiles for the upserted entities from the union of
-    the store's accumulated fact rows (at the snapshot BEFORE this run's
-    append — so this job never waits on, or re-reads, the in-flight fact
-    commit) and this run's in-memory delta facts — the same capped fold as
-    the batch path (`assemble_profiles`), so a merged entity's profile is
-    byte-identical to what a from-scratch batch run over the union corpus
-    produces.
+    the store's accumulated fact rows (at the run's starting store
+    `version`, BEFORE this run's append — so this job never waits on, or
+    re-reads, the in-flight fact commit) and this run's in-memory delta
+    facts — the same capped fold as the batch path (`assemble_profiles`),
+    so a merged entity's profile is byte-identical to what a from-scratch
+    batch run over the union corpus produces.
 
     Both store reads are SCOPED (broadcast semi-join on the affected keys
     before the resolve shuffle): a delta run only ever shuffles the
@@ -151,10 +201,9 @@ def _rebuild_profiles(
     (anti-join on the key), matching last-writer-wins store semantics."""
     from hinbox_spark.functions.skew import bounded_topk
 
-    st_facts = _st(spark, store, FACTS)
-    if _exists(st_facts):
-        prior = st_facts.read_resolved(
-            ["entity_id", "url"],
+    if version[FACTS] is not None:
+        prior = _st(spark, store, FACTS).read_resolved(
+            ["entity_id", "url"], version[FACTS],
             scope=affected_entities.select("entity_id"),
         ).join(
             delta_facts.select("entity_id", "url"),
@@ -178,10 +227,9 @@ def _rebuild_profiles(
         salt_expr=F.xxhash64("url"),
     ).join(ent_meta, "cluster_id").localCheckpoint(eager=False)
     profiles = assemble_profiles(rows)
-    st_cited = _st(spark, store, CITED)
-    if _exists(st_cited):
-        prior_cited = st_cited.read_resolved(
-            ["url"], scope=rows.select("url")
+    if version[CITED] is not None:
+        prior_cited = _st(spark, store, CITED).read_resolved(
+            ["url"], version[CITED], scope=rows.select("url")
         ).join(delta_cited.select("url"), ["url"], "left_anti")
         corpus = prior_cited.unionByName(delta_cited.select(*prior_cited.columns))
     else:
@@ -190,54 +238,13 @@ def _rebuild_profiles(
     return _with_profile_embedding(profiles, cfg)
 
 
-def _runs_dir(store: str) -> str:
-    return store.rstrip("/") + "/_runs"
-
-
-def _finalized(spark: SparkSession, store: str, run_id: str) -> bool:
-    return hfs.exists(spark, _runs_dir(store) + f"/{run_id}.json")
-
-
 def _bootstrap_run_id(output_dir: str) -> str:
     """A batch bootstrap's run id: derived from its output directory, so a
-    resumed bootstrap finishes its own run transaction, and two outputs
-    never share one."""
+    resumed bootstrap finishes its own commit, and two outputs never share
+    one."""
     return "bootstrap-" + uuid.uuid5(
         uuid.NAMESPACE_URL, output_dir.rstrip("/")
     ).hex
-
-
-def _recover_stale_runs(spark: SparkSession, store: str) -> list[str]:
-    """Roll back every table touched by a run that crashed mid-apply: a
-    `<run_id>.pending.json` without its final `<run_id>.json` journal
-    means some (possibly none, possibly all) of the run's commits landed
-    but the run never finalized — each listed table is rolled back to the
-    head recorded BEFORE the run's first commit, so a retry starts from a
-    consistent store. Single-writer assumption (the reference's model):
-    a pending file can only be stale, never in-flight, when a new run
-    starts. Returns the recovered run_ids."""
-    runs = _runs_dir(store)
-    if not hfs.exists(spark, runs):
-        return []
-    recovered = []
-    for path in hfs.list_files(spark, runs):
-        name = path.rsplit("/", 1)[-1]
-        if not name.endswith(".pending.json"):
-            continue
-        rid = name[: -len(".pending.json")]
-        if _finalized(spark, store, rid):
-            # finalized concurrently with the crash window — pending file
-            # is just leftover; drop it
-            hfs.delete(spark, runs + "/" + name)
-            continue
-        heads = json.loads(hfs.read_text(spark, path))
-        for table, head in heads.items():
-            st = _st(spark, store, table)
-            if st.latest_snapshot_id() != head:
-                st.rollback_to(head)
-        hfs.delete(spark, path)
-        recovered.append(rid)
-    return recovered
 
 
 def maintain_store(
@@ -246,25 +253,32 @@ def maintain_store(
     max_batches: int = 16,
     keep_snapshots: int = 8,
 ) -> dict[str, int]:
-    """Store maintenance between delta runs: every keyed table whose
-    merge-on-read chain exceeds `max_batches` batches is compacted
-    (sort-clustered on its key so min/max row-group stats prune key
-    lookups), then old snapshots past `keep_snapshots` are expired
-    (orphan-batch GC). The review_queue is deliberately NOT compacted by
-    key — it is the append-only audit trail, and folding it would erase
-    dispute history. Returns {table: new_snapshot_id} for tables touched.
+    """Store maintenance between delta runs, from the published version
+    (`_begin`): every keyed table whose merge-on-read chain exceeds
+    `max_batches` batches is compacted (sort-clustered on its key so min/max
+    row-group stats prune key lookups), the new heads are published as a
+    version, and only then are snapshots past `keep_snapshots` expired
+    (orphan-batch GC). The review_queue is deliberately NOT compacted by key
+    — it is the append-only audit trail, and folding it would erase dispute
+    history. Returns {table: new_snapshot_id} for tables touched.
 
     This is the Iceberg maintenance loop (rewrite_data_files +
     expire_snapshots) for the incremental store: without it a nightly
     delta adds ~7 batches/run forever and read cost grows O(runs)."""
+    store = cfg.snapshot_store_path
+    start = _begin(spark, store)
     touched: dict[str, int] = {}
     for name, plan in _TABLE_PLANS.items():
         if plan is None:
             continue
-        st = _st(spark, cfg.snapshot_store_path, name)
+        st = _st(spark, store, name)
         if st.n_batches() > max_batches:
             touched[name] = st.compact(plan[0], sort_by=plan[1])
-            st.expire_snapshots(keep_last=keep_snapshots)
+    heads = _heads(spark, store)
+    if heads != start["tables"]:
+        _publish_version(spark, store, start["version"] + 1, None, heads)
+    for name in touched:
+        _st(spark, store, name).expire_snapshots(keep_last=keep_snapshots)
     return touched
 
 
@@ -311,10 +325,9 @@ def commit_run(
     review: DataFrame,
     edges: Callable[[], DataFrame],
     profiles: Callable[[DataFrame, DataFrame], DataFrame],
-) -> None:
-    """Commit one run to the store at `cfg.snapshot_store_path` as a RUN
-    TRANSACTION — the one store write of the batch bootstrap and of a delta
-    run.
+) -> dict:
+    """Commit one run to the store at `cfg.snapshot_store_path` — the one
+    store write of the batch bootstrap and of a delta run.
 
     ``clusters`` are the run's mention rows, ``ent_map`` maps each of their
     cluster_ids to an entity_id, ``entities`` are the entity rows to upsert,
@@ -323,9 +336,8 @@ def commit_run(
     thread); ``profiles(facts, cited)`` gives the profile rows to upsert
     from the run's fact rows and cited articles (called on this thread,
     the long pole). The background commits go to ``ov``. Every row the run
-    writes carries ``run_id``."""
+    writes carries ``run_id``. Returns the store version it publishes."""
     store = cfg.snapshot_store_path
-    runs = _runs_dir(store)
 
     def st(name: str) -> SnapshotTable:
         return _st(spark, store, name)
@@ -333,15 +345,9 @@ def commit_run(
     def attributed(df: DataFrame) -> DataFrame:
         return df.withColumn("run_id", F.lit(run_id))
 
-    # record every table's pre-run head BEFORE the first commit; a crash
-    # anywhere below leaves this pending record, and the next run's
-    # _recover_stale_runs rolls all tables back to these heads — so the
-    # retry applies the run exactly once. A journal left by an earlier run
-    # with this id is dropped first: recovery would take it for this run's.
-    hfs.mkdirs(spark, runs)
-    hfs.delete(spark, runs + f"/{run_id}.json")
-    heads = {t: st(t).latest_snapshot_id() for t in _RUN_TABLES}
-    hfs.write_text(spark, runs + f"/{run_id}.pending.json", json.dumps(heads))
+    # build on the published version, so that a retry applies a crashed
+    # run exactly once
+    start = _begin(spark, store)
 
     # eager: three concurrent consumers (facts append, cited build, profile
     # rebuild) must share materialized blocks, not race a lazy checkpoint.
@@ -367,7 +373,7 @@ def commit_run(
     ).localCheckpoint()  # eager: CITED append ∥ grounding both consume it
 
     # every commit below is independent of the others (disjoint tables; a
-    # profile rebuild consumes the PRE-append facts snapshot plus the
+    # profile rebuild consumes the facts at the starting version plus the
     # in-memory facts), so they run as CONCURRENT Spark jobs from driver
     # threads — the fixed tail of a run is ~a dozen small commits
     ov.submit(st(ENTITIES).merge, entities)
@@ -381,24 +387,18 @@ def commit_run(
     idx = name_index_rows(entities).localCheckpoint()
     ov.submit(st(NAME_INDEX).append, idx)
     ov.submit(st(NAME_BANDS).append, name_band_rows(idx, cfg))
+    # the processed-pages log (cross-run F2) needs no order either: until
+    # the version below is published, the pages are un-logged
+    ov.submit(st(PAGES_LOG).append,
+              attributed(articles.select("url", "content_hash")))
     st(PROFILES).merge(profiles(facts, cited))
     ov.join()
 
-    # processed-pages log (cross-run F2) — committed LAST, strictly after
-    # every other commit succeeded: a crash anywhere above leaves the pages
-    # un-logged, so re-running the same pages reprocesses them; logging them
-    # concurrently would let a partial failure mark pages processed while
-    # their contributions were never applied, and a rerun would then skip
-    # them forever
-    st(PAGES_LOG).append(attributed(articles.select("url", "content_hash")))
-
-    # finalize: publish the journal (create-exclusive) and drop the pending
-    # record — from here the run can never be rolled back by recovery
-    tmp = runs + f"/_tmp-{run_id}.json"
-    hfs.write_text(spark, tmp, json.dumps({"run_id": run_id, "tables": heads}))
-    if not hfs.publish_without_overwrite(spark, tmp, runs + f"/{run_id}.json"):
-        hfs.delete(spark, tmp)  # another writer finalized this run id
-    hfs.delete(spark, runs + f"/{run_id}.pending.json")
+    # the commit point: until this version is published, every reader and
+    # the next writer see the store at `start`
+    return _publish_version(
+        spark, store, start["version"] + 1, run_id, _heads(spark, store)
+    )
 
 
 def run_incremental(
@@ -411,27 +411,33 @@ def run_incremental(
     """Process a delta page batch against the snapshot store at
     `cfg.snapshot_store_path` (required). Writes per-run tables (articles,
     mentions, entities_delta, edges, review, metrics) under `output_dir`
-    and commits the store updates atomically. Returns the per-run frames
-    plus the resolved store entities."""
+    and commits the store updates atomically. Every store read is at the
+    store version published when the run starts. Returns the per-run frames
+    plus the resolved store entities of the version the run publishes."""
     cfg = cfg or get_default_config()
     if not cfg.snapshot_store_path:
         raise ValueError("run_incremental requires cfg.snapshot_store_path")
     store = cfg.snapshot_store_path
     run_id = run_id or uuid.uuid4().hex
     hfs.mkdirs(spark, output_dir)
+    # the store as published; commits a crashed run left past it are unseen
+    version = store_version(spark, store)["tables"]
 
-    # a previous run that crashed mid-apply left partial store commits —
-    # roll every touched table back to its recorded pre-run head before
-    # this run reads anything (single-writer model)
-    _recover_stale_runs(spark, store)
+    def read(name: str) -> DataFrame:
+        return _st(spark, store, name).read(version[name])
+
+    def entities_at(tables: dict) -> DataFrame | None:
+        if tables[ENTITIES] is not None:
+            return _st(spark, store, ENTITIES).read_resolved(
+                ["entity_id"], tables[ENTITIES])
+        return None
 
     with pl.overlap(spark) as ov:
         # ── cross-run F2: content-hash skip against the processed-pages log ──
         articles = pl.relevant_articles(pages, cfg)
-        st_pages = _st(spark, store, PAGES_LOG)
-        if _exists(st_pages):
+        if version[PAGES_LOG] is not None:
             seen = (
-                st_pages.read()
+                read(PAGES_LOG)
                 .select("url", F.col("content_hash").alias("content_hash"))
                 .dropDuplicates(["url", "content_hash"])
             )
@@ -442,7 +448,7 @@ def run_incremental(
         _write(articles, output_dir, "articles")
 
         # fully-seen delta (nightly rerun with no new pages): nothing to link,
-        # nothing to commit — the store head stays untouched (no empty batches)
+        # nothing to commit — the store stays untouched (no empty batches)
         if articles.isEmpty():
             metrics = local_frame(
                 spark,
@@ -452,12 +458,9 @@ def run_incremental(
                 "stage string, rows long",
             ).withColumn("run_id", F.lit(run_id))
             _write(metrics, output_dir, "metrics")
-            st_e = _st(spark, store, ENTITIES)
             return {
                 "articles": articles,
-                "entities_store": (
-                    st_e.read_resolved(["entity_id"]) if _exists(st_e) else None
-                ),
+                "entities_store": entities_at(version),
                 "metrics": spark.read.parquet(_table_path(output_dir, "metrics")),
             }
 
@@ -470,22 +473,18 @@ def run_incremental(
         delta_entities = r.entities.localCheckpoint()
 
         # ── bipartite store linking ──
-        st_entities = _st(spark, store, ENTITIES)
-        if _exists(st_entities):
-            store_entities = st_entities.read_resolved(["entity_id"]).localCheckpoint(
-                eager=False
-            )
+        store_entities = entities_at(version)
+        if store_entities is not None:
+            store_entities = store_entities.localCheckpoint(eager=False)
             # persisted blocking index: raw reads (duplicate keys across
             # batches are deduped here; compaction keeps the chains short) —
             # the store side of every blocking family is a columnar scan of
             # precomputed keys, no UDF pass over store entities
-            st_idx = _st(spark, store, NAME_INDEX)
-            st_bands = _st(spark, store, NAME_BANDS)
-            if _exists(st_idx) and _exists(st_bands):
-                store_names = st_idx.read().drop("_seq").dropDuplicates(
+            if None not in (version[NAME_INDEX], version[NAME_BANDS]):
+                store_names = read(NAME_INDEX).drop("_seq").dropDuplicates(
                     ["entity_id", "entity_type", "match_key"]
                 )
-                store_bands = st_bands.read().drop("_seq").dropDuplicates(
+                store_bands = read(NAME_BANDS).drop("_seq").dropDuplicates(
                     ["entity_type", "node_id", "band"]
                 )
             else:
@@ -498,7 +497,6 @@ def run_incremental(
             ov.keep(assignments)  # returned
             review2 = review2.localCheckpoint()
         else:
-            store_entities = None
             assignments = local_frame(
                 spark, [], "delta_id string, store_id string, reason string, sim double"
             )
@@ -556,14 +554,16 @@ def run_incremental(
             return spark.read.parquet(_table_path(output_dir, "edges"))
 
         def _profiles(facts, cited):
-            profiles = _rebuild_profiles(spark, store, cfg, upserts, facts, cited)
+            profiles = _rebuild_profiles(
+                spark, store, version, cfg, upserts, facts, cited
+            )
             _write(profiles, output_dir, "profiles")
             return spark.read.parquet(_table_path(output_dir, "profiles"))
 
-        commit_run(
+        published = commit_run(
             spark, cfg, ov, run_id, clusters, ent_map, upserts, articles,
             review, _edges, _profiles,
-        )
+        )["tables"]
 
         edges = spark.read.parquet(_table_path(output_dir, "edges"))
         review = spark.read.parquet(_table_path(output_dir, "review"))
@@ -594,7 +594,7 @@ def run_incremental(
             "entities_delta": spark.read.parquet(
                 _table_path(output_dir, "entities_delta")
             ),
-            "entities_store": st_entities.read_resolved(["entity_id"]),
+            "entities_store": entities_at(published),
             "edges": edges,
             "review": review,
             "profiles": profiles,

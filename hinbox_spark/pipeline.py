@@ -348,12 +348,10 @@ def run_pipeline(
     store = cfg.snapshot_store_path
     if store:
         # with a store configured this run is its bootstrap, committed by
-        # the delta run's transaction. A crashed run's partial commits (this
-        # output's own among them) are rolled back first; the run id is
-        # this output's, so a resume finishes the commit it left open.
+        # the delta run's `commit_run`. The run id is this output's, so a
+        # resume finishes a commit whose store version was never published.
         from hinbox_spark import incremental as inc
 
-        inc._recover_stale_runs(spark, store)
         run_id = inc._bootstrap_run_id(output_dir)
 
     # run-level counters (filled by the stages below when they execute;
@@ -396,7 +394,7 @@ def run_pipeline(
         # fails reading the missing profiles table (wedged checkpoint dir) —
         # and the store commit, which needs the block's cached clusters
         if not done("entities", "edges", "review", "decisions", "profiles") or (
-            store and not inc._finalized(spark, store, run_id)
+            store and not inc._published(spark, store, run_id)
         ):
             r = resolve(mentions, articles, cfg)
             ov.release(r.nodes, r.clusters)
@@ -461,7 +459,10 @@ def run_pipeline(
             # slots, stretching the critical path. The metrics scans stay
             # in the final stage where the cluster is otherwise idle.
 
-            _write(r.entities, output_dir, "entities", ["entity_type"])
+            # a bootstrap commits its entity rows as folded (the delta
+            # upserts' schema), from the checkpoint the per-run table reads
+            projected = r.entities.localCheckpoint() if store else r.entities
+            _write(projected, output_dir, "entities", ["entity_type"])
             entities = read("entities")
             _mark("cluster_entities")
             # edges and profiles both read only the cached clusters and the
@@ -477,12 +478,12 @@ def run_pipeline(
             _write(profiles, output_dir, "profiles")
 
             if store:
-                # the store commit reads the per-run tables as written
+                # the store commit reads the edges and profiles as written
                 # (entity merge-on-read upsert by entity_id: a re-run of
                 # the same corpus supersedes, never duplicates)
                 ov.join()
                 inc.commit_run(
-                    spark, cfg, ov, run_id, r.clusters, entities, entities,
+                    spark, cfg, ov, run_id, r.clusters, projected, projected,
                     articles, r.review, lambda: read("edges"),
                     lambda facts, cited: read("profiles"),
                 )

@@ -8,11 +8,11 @@ the two properties a streaming sink needs —
     skip turns a re-delivered epoch into an empty delta whose apply is a
     no-op (the store head doesn't move), so foreachBatch's at-least-once
     contract composes to exactly-once EFFECTS on the store;
-  * crash atomicity: the run transaction (`incremental.commit_run`)
-    journals pre-run heads and rolls back partial applies before the next
-    batch reads anything. The batch bootstrap the stream starts from is
-    committed by the same transaction, so a crashed bootstrap is rolled
-    back too, and `run_pipeline(resume=True)` finishes it.
+  * crash atomicity: a run's store commit (`incremental.commit_run`) is
+    visible only once it publishes a store version, at which every store
+    read resolves its tables; the next commit rolls back what a crashed one
+    left past it. The batch bootstrap the stream starts from commits the
+    same way, and `run_pipeline(resume=True)` finishes a crashed one.
 Each epoch's per-run tables (articles, mentions, deltas, review, metrics)
 land under `output_root/batch-<epoch>/` for lineage.
 

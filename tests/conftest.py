@@ -44,6 +44,24 @@ def persistent_rdds(spark) -> set:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
+def store_rows(spark, store: str, resolved: bool = False) -> dict:
+    """Every run table of a store read at the store's published version:
+    table → sorted rows, run attribution and `_seq` left out. With
+    ``resolved``, keyed tables are read merged on their keys."""
+    from hinbox_spark.incremental import _TABLE_PLANS, store_version
+    from hinbox_spark.tables import SnapshotTable
+
+    version = store_version(spark, store)["tables"]
+    out = {}
+    for table, plan in _TABLE_PLANS.items():
+        st = SnapshotTable(spark, f"{store}/{table}")
+        df = (st.read_resolved(plan[0], version[table]) if resolved and plan
+              else st.read(version[table]))
+        cols = sorted(set(df.columns) - {"_seq", "run_id"})
+        out[table] = sorted(map(repr, df.select(*cols).collect()))
+    return out
+
+
 @pytest.fixture(scope="session")
 def delta_world(spark, tmp_path_factory):
     """A store bootstrapped by `run_pipeline` from 30 of 40 pages

@@ -138,18 +138,21 @@ def _written_schema(path, drop=()):
 
 def test_entity_tables_share_one_schema(spark, delta_world):
     """The batch `entities` table, the delta's `entities_delta` and the
-    store batch the delta committed are written with one schema, and read
-    back with one schema (the store's resolved through its key)."""
+    store batches the bootstrap and the delta committed are written with
+    one schema, and read back with one schema (the store's resolved through
+    its key)."""
     base = delta_world["base"]
     st = SnapshotTable(spark, delta_world["store"] + "/entities")
-    delta_batch = st._read_manifest(st.latest_snapshot_id())["entries"][-1]["batch"]
+    entries = st._read_manifest(st.latest_snapshot_id())["entries"]
+    boot_batch, delta_batch = entries[0]["batch"], entries[-1]["batch"]
     # entity_type is a partition directory of the two run tables
-    batch, delta, store = (
+    batch, delta, boot_store, store = (
         _written_schema(base / "batch" / "entities"),
         _written_schema(base / "delta" / "entities_delta"),
+        _written_schema(f"{st.data_dir}/{boot_batch}", drop=["entity_type"]),
         _written_schema(f"{st.data_dir}/{delta_batch}", drop=["entity_type"]),
     )
-    assert batch == delta == store
+    assert batch == delta == boot_store == store
     batch, delta, store = (
         {f.name: (f.dataType, f.nullable) for f in df.schema}
         for df in (

@@ -12,14 +12,21 @@ disputes instead of store-store auto-merges, empty-delta no-op commits.
 from __future__ import annotations
 
 import dataclasses
+import shutil
 import tempfile
 
 import pyspark.sql.functions as F
 import pytest
+from conftest import store_rows
 
+import hinbox_spark.incremental as incmod
+from hinbox_spark import fs as hfs
 from hinbox_spark.config import get_default_config
 from hinbox_spark.functions.embeddings import embed_text
-from hinbox_spark.incremental import run_incremental
+from hinbox_spark.incremental import (
+    _RUN_TABLES, _bootstrap_run_id, maintain_store, run_incremental,
+    store_version,
+)
 from hinbox_spark.operators.store_link import link_entities_to_store
 from hinbox_spark.pipeline import run_pipeline
 from hinbox_spark.sources.pages_gen import pages_dataframe
@@ -180,8 +187,6 @@ def test_two_sequential_deltas_converge(spark):
     # table's merge chain to one sort-clustered batch and expires old
     # snapshots, while resolved contents stay identical and the
     # review_queue audit trail is untouched ──
-    from hinbox_spark.incremental import maintain_store
-
     st_e = SnapshotTable(spark, store + "/entities")
     assert st_e.n_batches() >= 3  # bootstrap + 2 deltas
     before = {
@@ -324,14 +329,30 @@ def test_acronym_family_never_pairs_two_long_forms(spark):
     assert got.get("d2", (None, None))[1] == "acronym"  # short x long: yes
 
 
-def test_crash_mid_apply_recovers_exactly_once(spark, monkeypatch, delta_world):
-    """Run transaction: a crash AFTER some store commits landed (entities
-    merge, facts append) but BEFORE the run finalized leaves a pending
-    journal; the retry rolls every table back to its pre-run head and
-    re-applies the delta, ending byte-identical to a never-crashed run —
-    counters are never double-merged, pages never skipped-forever."""
-    import hinbox_spark.incremental as incmod
+def _boom(*a, **k):
+    raise RuntimeError("injected crash")
 
+
+def _fail_commit(mp, table):
+    """Make the commit of one store table raise."""
+    method = "merge" if table in ("entities", "profiles") else "append"
+    real = getattr(SnapshotTable, method)
+
+    def commit(self, df, *a, **k):
+        if self.path.endswith("/" + table):
+            _boom()
+        return real(self, df, *a, **k)
+
+    mp.setattr(SnapshotTable, method, commit)
+
+
+def test_crash_mid_apply_recovers_exactly_once(spark, monkeypatch, delta_world):
+    """A crash AFTER some store commits landed (entities merge, facts
+    append) but BEFORE the run published its store version leaves the
+    version as it was, every table read at it equal to the pre-run store;
+    the retry rolls every table back to the version and re-applies the
+    delta, ending byte-identical to a never-crashed run — counters are
+    never double-merged, pages never skipped-forever."""
     # control: clean application of the same delta to the same bootstrap
     store_ok, pages_b = delta_world["store"], delta_world["pages_b"]
 
@@ -339,22 +360,17 @@ def test_crash_mid_apply_recovers_exactly_once(spark, monkeypatch, delta_world):
     # were submitted (entities/facts/cited/edges/queue may have landed)
     store_cr, cfg_cr = delta_world["fork"]()
     real = incmod._rebuild_profiles
-
-    def boom(*a, **k):
-        raise RuntimeError("injected crash")
-
-    monkeypatch.setattr(incmod, "_rebuild_profiles", boom)
+    monkeypatch.setattr(incmod, "_rebuild_profiles", _boom)
     with pytest.raises(RuntimeError, match="injected crash"):
         run_incremental(
             spark, pages_b, tempfile.mkdtemp(), cfg=cfg_cr, run_id="d-crash"
         )
     monkeypatch.setattr(incmod, "_rebuild_profiles", real)
-    # pending journal left behind; pages were NOT logged (log is last)
-    assert any(
-        p.endswith("d-crash.pending.json")
-        for p in __import__("glob").glob(store_cr + "/_runs/*")
-    )
-    # retry: recovery rolls back the partial commits, then applies cleanly
+    # the store as published is the pre-run store (its pages NOT logged)
+    pristine = delta_world["pristine"]
+    assert store_version(spark, store_cr) == store_version(spark, pristine)
+    assert store_rows(spark, store_cr) == store_rows(spark, pristine)
+    # retry: the commit rolls back the partial commits, then applies cleanly
     out = run_incremental(
         spark, pages_b, tempfile.mkdtemp(), cfg=cfg_cr, run_id="d-retry"
     )
@@ -370,88 +386,197 @@ def test_crash_mid_apply_recovers_exactly_once(spark, monkeypatch, delta_world):
         assert ra == rb, f"{table} diverged after crash recovery"
 
 
-def _raw_rows(spark, store, table):
-    """A store table's rows at its head, run attribution left out."""
-    df = SnapshotTable(spark, f"{store}/{table}").read()
-    cols = sorted(set(df.columns) - {"_seq", "run_id"})
-    return sorted(map(repr, df.select(*cols).collect()))
-
-
 @pytest.mark.parametrize(
     "crash", ["build_profiles", "name_bands", "processed_pages"]
 )
 def test_crashed_bootstrap_is_finished_by_resume(
     spark, monkeypatch, delta_world, crash
 ):
-    """The batch bootstrap commits through the delta run's transaction. A
+    """The batch bootstrap commits through the delta run's `commit_run`. A
     crash before the store commit (in build_profiles) leaves every store
     table's head unchanged; a crash in a background commit (name_bands) or
-    in the last one (the processed-pages log) leaves a pending journal.
-    Either way `run_pipeline(resume=True)` on the same output rolls the
-    partial commits back and finishes the bootstrap: every store table then
-    holds the rows of an uncrashed bootstrap, none twice."""
+    in the processed-pages log append leaves no table in the published
+    version and no version carrying the bootstrap's run id. Either way
+    `run_pipeline(resume=True)` on the same output rolls the partial
+    commits back and finishes the bootstrap: every store table read at the
+    version it publishes then holds the rows of an uncrashed bootstrap,
+    none twice."""
     import hinbox_spark.pipeline as pl
-    from hinbox_spark import fs as hfs
-    from hinbox_spark.incremental import (
-        _RUN_TABLES, _bootstrap_run_id, _runs_dir,
-    )
 
     base = delta_world["base"]
     store, out = str(base / f"boot-{crash}"), str(base / f"boot-{crash}-out")
     cfg = dataclasses.replace(delta_world["cfg"], snapshot_store_path=store)
 
-    def boom(*a, **k):
-        raise RuntimeError("injected crash")
-
     if crash == "build_profiles":
-        monkeypatch.setattr(pl, "build_profiles", boom)
+        monkeypatch.setattr(pl, "build_profiles", _boom)
     else:
-        real = SnapshotTable.append
-
-        def append(self, df, *a, **k):
-            if self.path.endswith("/" + crash):
-                boom()
-            return real(self, df, *a, **k)
-
-        monkeypatch.setattr(SnapshotTable, "append", append)
-    if crash == "processed_pages":
-        # a journal an earlier run of this output finalized under the same
-        # run id must not pass this run's crash off as finalized
-        hfs.mkdirs(spark, _runs_dir(store))
-        hfs.write_text(
-            spark, f"{_runs_dir(store)}/{_bootstrap_run_id(out)}.json", "{}"
-        )
+        _fail_commit(monkeypatch, crash)
     with pytest.raises(RuntimeError, match="injected crash"):
         run_pipeline(spark, delta_world["pages_a"], out, cfg=cfg, resume=False)
     monkeypatch.undo()
-    heads = {t: SnapshotTable(spark, f"{store}/{t}").latest_snapshot_id()
-             for t in _RUN_TABLES}
-    if crash == "build_profiles":
-        assert set(heads.values()) == {None}
-    else:
-        assert hfs.exists(
-            spark, f"{_runs_dir(store)}/{_bootstrap_run_id(out)}.pending.json"
-        )
+    # the store as published holds no table: read at its (empty) heads
+    # after a crash before the commit, else at version 0, the empty store
+    # the commit began from
+    assert set(store_version(spark, store)["tables"].values()) == {None}
+    assert not incmod._published(spark, store, _bootstrap_run_id(out))
 
     run_pipeline(spark, delta_world["pages_a"], out, cfg=cfg, resume=True)
-    for table in _RUN_TABLES:
-        assert _raw_rows(spark, store, table) == _raw_rows(
-            spark, delta_world["pristine"], table
-        ), f"{table} differs from the uncrashed bootstrap"
+    assert store_version(spark, store)["run_id"] == _bootstrap_run_id(out)
+    assert store_rows(spark, store) == store_rows(spark, delta_world["pristine"])
 
 
 def test_bootstrap_rows_carry_its_run_id(spark, delta_world):
-    """Every row a bootstrap writes carries one run id: the one its
-    finalized journal is published under."""
-    from hinbox_spark import fs as hfs
-    from hinbox_spark.incremental import _bootstrap_run_id, _runs_dir
-
+    """Every row a bootstrap writes carries one run id: the one the store
+    version it publishes carries."""
     store = delta_world["pristine"]
     rid = _bootstrap_run_id(str(delta_world["base"] / "batch"))
-    assert hfs.exists(spark, f"{_runs_dir(store)}/{rid}.json")
+    version = store_version(spark, store)
+    assert version["run_id"] == rid
     for table in ("edges", "processed_pages", "review_queue"):
-        df = SnapshotTable(spark, f"{store}/{table}").read()
+        df = SnapshotTable(spark, f"{store}/{table}").read(
+            version["tables"][table]
+        )
         ids = {r.run_id for r in df.select("run_id").distinct().collect()}
         if table != "review_queue":
             assert df.count() > 0, table
         assert ids == ({rid} if df.count() else set()), table
+
+
+def test_crash_at_each_commit_leaves_the_version(spark, delta_world):
+    """A delta that fails at any one of its 9 table commits, or at the
+    publish of its store version, leaves the published version as it was,
+    and every table read at it equals the pre-run store row for row. One
+    store takes the crashes in turn, each a retry of the one before; the
+    retry after the last equals the uncrashed control."""
+    store, cfg = delta_world["fork"]()
+    pristine = delta_world["pristine"]
+    before, rows = store_version(spark, pristine), store_rows(spark, pristine)
+    for crash in (*_RUN_TABLES, "publish"):
+        with pytest.MonkeyPatch.context() as mp:
+            if crash == "publish":
+                mp.setattr(incmod, "_publish_version", _boom)
+            else:
+                _fail_commit(mp, crash)
+            with pytest.raises(RuntimeError, match="injected crash"):
+                run_incremental(
+                    spark, delta_world["pages_b"],
+                    str(delta_world["base"] / f"crash-{crash}"),
+                    cfg=cfg, run_id=f"crash-{crash}",
+                )
+        assert store_version(spark, store) == before, crash
+        assert store_rows(spark, store) == rows, crash
+    run_incremental(spark, delta_world["pages_b"],
+                    str(delta_world["base"] / "crash-retry"), cfg=cfg,
+                    run_id="crash-retry")
+    assert store_rows(spark, store) == store_rows(spark, delta_world["store"])
+
+
+def test_delta_reads_the_store_at_its_starting_version(
+    spark, monkeypatch, delta_world
+):
+    """Every store read a delta makes before it publishes — the profile
+    rebuild's facts read included, whatever the concurrent facts append has
+    committed — is at the store version published when the run started. A
+    reader of the store at its version sees exactly the pre-run rows after
+    each table commit, and after the last one, just before the publish."""
+    store, cfg = delta_world["fork"]()
+    start = store_version(spark, store)
+    reads, versions, publishing, at_publish = [], [], [], []
+    real_read, real_resolved = SnapshotTable.read, SnapshotTable.read_resolved
+    real_publish = incmod._publish_version
+
+    def record(st, snapshot_id):
+        if not publishing:
+            reads.append((st.path.rsplit("/", 1)[-1], snapshot_id))
+
+    def read(self, snapshot_id=None, *a, **k):
+        record(self, snapshot_id)
+        return real_read(self, snapshot_id, *a, **k)
+
+    def read_resolved(self, key_cols, snapshot_id=None, *a, **k):
+        record(self, snapshot_id)
+        return real_resolved(self, key_cols, snapshot_id, *a, **k)
+
+    def observed(method):
+        real = getattr(SnapshotTable, method)
+
+        def commit(self, df, *a, **k):
+            sid = real(self, df, *a, **k)
+            versions.append(store_version(spark, store))
+            return sid
+
+        return commit
+
+    def publish(*a, **k):
+        publishing.append(True)
+        at_publish.append(store_rows(spark, store))
+        return real_publish(*a, **k)
+
+    monkeypatch.setattr(SnapshotTable, "read", read)
+    monkeypatch.setattr(SnapshotTable, "read_resolved", read_resolved)
+    for method in ("append", "merge"):
+        monkeypatch.setattr(SnapshotTable, method, observed(method))
+    monkeypatch.setattr(incmod, "_publish_version", publish)
+    out = run_incremental(spark, delta_world["pages_b"],
+                          str(delta_world["base"] / "pinned"), cfg=cfg,
+                          run_id="pinned")
+    monkeypatch.undo()
+
+    assert {t for t, _ in reads} == {
+        "processed_pages", "entities", "name_index", "name_bands",
+        "profile_facts", "cited_articles",
+    }
+    assert all(sid == start["tables"][t] for t, sid in reads), reads
+    assert len(versions) == len(_RUN_TABLES)
+    assert all(v == start for v in versions)
+    assert at_publish == [store_rows(spark, delta_world["pristine"])]
+    assert out["entities_store"].count() == (
+        SnapshotTable(spark, delta_world["store"] + "/entities")
+        .read_resolved(["entity_id"]).count()
+    )
+
+
+def test_maintain_after_crashed_delta(spark, delta_world):
+    """`maintain_store` after a delta that crashed in its last commits works
+    on the published version: the crashed run's commits are not folded into
+    the compacted tables, the snapshots the new version references survive
+    `keep_snapshots=1`, and a retry equals the uncrashed control."""
+    store, cfg = delta_world["fork"]()
+    with pytest.MonkeyPatch.context() as mp:
+        _fail_commit(mp, "processed_pages")
+        with pytest.raises(RuntimeError, match="injected crash"):
+            run_incremental(spark, delta_world["pages_b"],
+                            str(delta_world["base"] / "maint-crash"),
+                            cfg=cfg, run_id="maint-crash")
+    touched = maintain_store(spark, cfg, max_batches=0, keep_snapshots=1)
+    assert "entities" in touched
+    assert store_rows(spark, store, resolved=True) == store_rows(
+        spark, delta_world["pristine"], resolved=True
+    )
+    run_incremental(spark, delta_world["pages_b"],
+                    str(delta_world["base"] / "maint-retry"), cfg=cfg,
+                    run_id="maint-retry")
+    assert store_rows(spark, store, resolved=True) == store_rows(
+        spark, delta_world["store"], resolved=True
+    )
+
+
+def test_store_without_version_is_read_at_its_heads(spark, delta_world):
+    """A store written before versions existed (no version file) is read at
+    its table heads, a journal such a store may hold is ignored, and its
+    first commit publishes version 1."""
+    store, cfg = delta_world["fork"]()
+    pristine = store_version(spark, store)
+    shutil.rmtree(f"{store}/_versions")
+    hfs.write_text(
+        spark, f"{store}/_runs/old.pending.json",
+        '{"entities": null, "processed_pages": null}',
+    )
+    assert store_version(spark, store) == {
+        "version": None, "run_id": None, "tables": pristine["tables"],
+    }
+    run_incremental(spark, delta_world["pages_b"],
+                    str(delta_world["base"] / "unversioned"), cfg=cfg,
+                    run_id="unversioned")
+    assert store_version(spark, store)["version"] == 1
+    assert store_rows(spark, store) == store_rows(spark, delta_world["store"])
